@@ -908,22 +908,12 @@ object SparkEntry {
     // dyadic fractions — bit-exact in any engine (the q58 stance).
     "q83_lm_band" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      // the vocab is read twice inside the scoring plan (broadcast vocab
-      // + broadcast total) and the scored frame twice by the band filter
-      // (quantile cutoffs + the filter side) — both are tiny (vocab /
-      // id-sized) next to the token explode that produces them, so
-      // materialize each once instead of re-running the LM pipeline per
-      // consumer (guide §5: cache what is reused AND expensive to
-      // recompute; identical rows, purely an evaluation-count change)
       val counts = graft.quality.LmScore.unigramCounts(docs, "text")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val scored = docs.select(col("doc_id"), col("lang"))
         .join(graft.quality.LmScore.scoreQuantizedBits(docs, "text", "doc_id", counts),
           Seq("doc_id"))
         .withColumn("milli_bits", when(col("n_tokens") === 0, 0L)
           .otherwise(expr("(sum_bits * 1000) div n_tokens")))
-        .localCheckpoint()
-      counts.unpersist(false)
       graft.stats.Quantiles.keepQuantileBand(scored, col("milli_bits"),
           Seq("lang"), 0.0, 0.75, useExact = true)
         .select("doc_id", "lang", "n_tokens", "sum_bits", "milli_bits")
@@ -1246,14 +1236,8 @@ object SparkEntry {
     // exact n-gram (word 3-shingle) Jaccard between consecutive docs —
     // the verification kernel of near-dup detection, oracle-checked
     "q34_ngram_jaccard" -> ((s, dir) => {
-      def shingles(c: Column): Column = {
-        val words = split(lower(trim(c)), "\\s+")
-        when(size(words) >= 3,
-          transform(sequence(lit(0), size(words) - 3), i =>
-            concat_ws(" ", element_at(words, i + 1), element_at(words, i + 2),
-              element_at(words, i + 3))))
-          .otherwise(array().cast("array<string>"))
-      }
+      def shingles(c: Column): Column =
+        graft.plans.GraftFunctions.wordGrams(split(lower(trim(c)), "\\s+"), 3)
       val d = t(s, dir, "documents")
       val a = d.select(col("doc_id").as("id_a"), shingles(col("text")).as("sa"))
       val b = d.select((col("doc_id") - 1).as("id_a"), shingles(col("text")).as("sb"))

@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
 
+import graft.plans.GraftFunctions.wordGrams
+
 /** Deduplication operators for large-scale training-data pipelines.
   *
   * Four tiers, cheapest first:
@@ -879,8 +881,9 @@ object Dedup {
     * thresholds on — unlike `minhashDupPairs` (whole-doc similarity)
     * this catches a unique page whose MIDDLE is a syndicated article.
     *
-    * Shape: one narrow pass builds the in-row gram array (no text
-    * shuffle), positions explode to (id, pos, gram); ONE aggregate
+    * Shape: one narrow pass builds the in-row gram array with the
+    * native `word_grams` kernel over the lowered words (no text shuffle,
+    * no per-gram lambda), positions explode to (id, pos, gram); ONE aggregate
     * shuffle counts gram frequency (map-side partial agg), a semi-join
     * keeps the duplicated positions, and coverage is a CLOSED FORM over
     * one id-keyed window — intervals have fixed width `w`, so the union
@@ -911,11 +914,8 @@ object Dedup {
     val ws = F.filter(F.split(F.lower(F.col(textCol)), "\\s+"), x => x =!= "")
     val base = docs.select(F.col(idCol), ws.as("__ws"))
       .select(F.col(idCol), F.col("__ws"), F.size(F.col("__ws")).as("__n"))
-    val grams = base.filter(F.col("__n") >= w)
-      .select(F.col(idCol), F.posexplode(
-        F.transform(F.sequence(F.lit(0), F.col("__n") - w),
-          i => F.array_join(F.slice(F.col("__ws"), i + 1, F.lit(w)), " ")))
-        .as(Seq("__pos", "__g")))
+    val grams = base.select(F.col(idCol),
+      F.posexplode(wordGrams(F.col("__ws"), w)).as(Seq("__pos", "__g")))
     val dupHashes = grams.select(F.xxhash64(F.col("__g")).as("__gh"))
       .groupBy("__gh").agg(F.count(F.lit(1)).as("__hc"))
       .filter(F.col("__hc") >= minCount)
@@ -955,8 +955,10 @@ object Dedup {
     * start in them); docs whose every position is covered come back
     * empty, not dropped — the caller decides on a min-length gate.
     *
-    * Shape: ONE token explode carries (pos, original word, lowered gram
-    * built in-row — no lead chains); one map-side-combined gram-count
+    * Shape: the lowered words are projected once and `word_grams` builds
+    * the row's grams natively; ONE explode of the original words zipped
+    * with their grams carries (pos, word, gram) (no lead chains, no
+    * per-element lambda); one map-side-combined gram-count
     * shuffle; a gram join marks dup STARTS; one id-keyed window turns
     * starts into per-position coverage via max over RANGE [pos-w+1, pos]
     * (closed form — never an explode of the w covered positions per
@@ -972,19 +974,16 @@ object Dedup {
     val wsOrig = F.filter(F.split(F.col(textCol), "\\s+"), x => x =!= "")
     val base = docs.select(F.col(idCol), wsOrig.as("__ws"))
       .select(F.col(idCol), F.col("__ws"), F.size(F.col("__ws")).as("__n"))
-    // (word, gram-or-null) pairs built in one in-row pass: gram i joins
-    // the lowered words [i, i+w); tail positions carry a null gram
-    val lws = F.transform(F.col("__ws"), x => F.lower(x))
-    val grams = F.transform(F.sequence(F.lit(0), F.col("__n") - w),
-      i => F.array_join(F.slice(lws, i + 1, F.lit(w)), " "))
-    val padded = F.concat(grams,
-      F.array_repeat(F.lit(null).cast("string"), F.lit(w - 1)))
+    // gram i joins the lowered words [i, i+w) and rides word i; the last
+    // w-1 positions start no gram and get a null one. The zip feeds the
+    // generator, so the grams are built once per row (an index lookup
+    // after the explode lets the optimizer rebuild them per position)
     val tok = base.filter(F.col("__n") >= w)
-      .withColumn("__zip",
-        F.zip_with(F.col("__ws"), padded, (a, b) => F.struct(a.as("w"), b.as("g"))))
-      .select(F.col(idCol), F.posexplode(F.col("__zip")).as(Seq("__pos", "__t")))
+      .withColumn("__gs", wordGrams(F.transform(F.col("__ws"), x => F.lower(x)), w))
+      .select(F.col(idCol),
+        F.posexplode(F.arrays_zip(F.col("__ws"), F.col("__gs"))).as(Seq("__pos", "__t")))
       .select(F.col(idCol), F.col("__pos"),
-        F.col("__t").getField("w").as("__w"), F.col("__t").getField("g").as("__g"))
+        F.col("__t").getField("__ws").as("__w"), F.col("__t").getField("__gs").as("__g"))
     val gramsOnly = tok.filter(F.col("__g").isNotNull)
     val dupHashes = gramsOnly.select(F.xxhash64(F.col("__g")).as("__gh"))
       .groupBy("__gh").agg(F.count(F.lit(1)).as("__hc"))
@@ -1027,8 +1026,9 @@ object Dedup {
     * score. Gram convention matches `decontaminate`'s shingles (full
     * `w`-grams; shorter texts contribute their whole text as one gram).
     *
-    * Shape: both sides project to distinct (id, gram) pairs — the gram
-    * sets dedup IN-ROW (array_distinct) before exploding, so the join
+    * Shape: both sides project to distinct (id, gram) pairs — `word_grams`
+    * builds each text's grams natively and the gram sets dedup IN-ROW
+    * (array_distinct) before exploding, so the join
     * never sees within-text repeats; ONE gram-keyed join (the benchmark
     * side is tiny and broadcasts at real scale) and one two-way
     * count-distinct per item. Grams compare as exact strings (the
@@ -1039,9 +1039,7 @@ object Dedup {
     require(w >= 1, s"gram width w must be >= 1, got $w")
     def gramsOf(c: Column): Column = {
       val ws = F.filter(F.split(F.lower(c), "\\s+"), x => x =!= "")
-      F.when(F.size(ws) >= w,
-        F.array_distinct(F.transform(F.sequence(F.lit(0), F.size(ws) - w),
-          i => F.array_join(F.slice(ws, i + 1, F.lit(w)), " "))))
+      F.when(F.size(ws) >= w, F.array_distinct(wordGrams(ws, w)))
         .when(F.size(ws) >= 1, F.array(F.array_join(ws, " ")))
         .otherwise(F.array().cast("array<string>"))
     }

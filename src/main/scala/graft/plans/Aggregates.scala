@@ -74,13 +74,33 @@ final class BoundedMinHeap(val k: Int, val withPayload: Boolean) {
     }
   }
 
-  /** (sorted-ascending keys, payloads in the same order). */
+  /** (sorted-ascending keys, payloads in the same order); equal keys
+    * keep their heap-slot order. */
   def sorted(): (Array[Long], Array[Long]) = {
-    val idx = (0 until size).sortBy(keys(_)).toArray
+    val idx = Array.range(0, size)
+    mergeSort(idx, new Array[Int](size), 0, size)
     val ks = idx.map(keys(_))
     val ps = if (withPayload) idx.map(payloads(_)) else null
     (ks, ps)
   }
+
+  /** Stable merge sort of heap-slot indices [lo, hi) by key, on
+    * primitive arrays (no boxed index sequence). */
+  private def mergeSort(idx: Array[Int], tmp: Array[Int], lo: Int, hi: Int): Unit =
+    if (hi - lo > 1) {
+      val mid = (lo + hi) >>> 1
+      mergeSort(idx, tmp, lo, mid)
+      mergeSort(idx, tmp, mid, hi)
+      var i = lo
+      var j = mid
+      var o = lo
+      while (o < hi) {
+        if (j >= hi || (i < mid && keys(idx(i)) <= keys(idx(j)))) { tmp(o) = idx(i); i += 1 }
+        else { tmp(o) = idx(j); j += 1 }
+        o += 1
+      }
+      System.arraycopy(tmp, lo, idx, lo, hi - lo)
+    }
 
   def serialize(): Array[Byte] = {
     val bb = java.nio.ByteBuffer.allocate(4 + size * (if (withPayload) 16 else 8))

@@ -284,6 +284,90 @@ case class VecInt8CosineToQ(child: Expression, qCodes: Seq[Double], qNorm: Doubl
     copy(child = newChild)
 }
 
+/** Space-joined word `w`-grams of a string-array column: the `n - w + 1`
+  * grams over positions [i, i + w) for i = 0 .. n - w, an empty array
+  * when n < w, null for a null array. Null elements are skipped, as
+  * `array_join` skips them. The one gram builder of the dup-span,
+  * contamination and q34 shingle operators: as a higher-order lambda
+  * (`transform(sequence(0, n - w), i => array_join(slice(ws, i + 1, w),
+  * " "))`) any array expression captured as `ws` is re-evaluated once
+  * per gram, O(n²) per row. Here the words are joined once into one
+  * buffer and every gram is a zero-copy view of it, O(bytes) per row. */
+case class WordGrams(child: Expression, w: Int) extends UnaryExpression {
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    child.dataType match {
+      case ArrayType(StringType, _) if w >= 1 =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case ArrayType(StringType, _) => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"word_grams requires w >= 1, got $w")
+      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"word_grams requires an array<string> column, got $other")
+    }
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def prettyName: String = "word_grams"
+
+  override def nullSafeEval(input: Any): Any =
+    WordGrams.build(input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], w)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.plans.WordGrams.build($c, $w);")
+
+  override protected def withNewChildInternal(newChild: Expression): WordGrams =
+    copy(child = newChild)
+}
+
+object WordGrams {
+  def build(words: org.apache.spark.sql.catalyst.util.ArrayData, w: Int): GenericArrayData = {
+    val n = words.numElements()
+    if (n < w) return new GenericArrayData(new Array[Any](0))
+    val ws = new Array[UTF8String](n)
+    var bytes = 0
+    var j = 0
+    while (j < n) {
+      if (!words.isNullAt(j)) {
+        ws(j) = words.getUTF8String(j)
+        bytes += ws(j).numBytes() + 1
+      }
+      j += 1
+    }
+    // the non-null words joined by single spaces; from(j) is where the
+    // first non-null word at or after j starts, to(j) where the last one
+    // at or before j ends, so gram i is buf[from(i), to(i + w - 1))
+    val buf = new Array[Byte](math.max(bytes - 1, 0))
+    java.util.Arrays.fill(buf, ' '.toByte)
+    val from = new Array[Int](n)
+    val to = new Array[Int](n)
+    var off = 0
+    var end = 0
+    j = 0
+    while (j < n) {
+      if (ws(j) != null) {
+        from(j) = off
+        ws(j).writeToMemory(buf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + off)
+        end = off + ws(j).numBytes()
+        off = end + 1
+      } else from(j) = -1
+      to(j) = end
+      j += 1
+    }
+    var next = buf.length
+    j = n - 1
+    while (j >= 0) {
+      if (from(j) < 0) from(j) = next else next = from(j)
+      j -= 1
+    }
+    val out = new Array[Any](n - w + 1)
+    var i = 0
+    while (i < out.length) {
+      out(i) = UTF8String.fromBytes(buf, from(i), math.max(to(i + w - 1) - from(i), 0))
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+}
+
 /** G1 as a SQL-facing Generator: split_snippets(text, limit) explodes a
   * file into chunks of >= limit non-empty lines (tail merged), semantics
   * of `create_stack_snippets.py:120-141`. Generators don't participate in

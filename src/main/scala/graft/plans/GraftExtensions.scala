@@ -14,6 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *   spark.sql.extensions=graft.plans.GraftExtensions
   *
   * After injection: SELECT multi_contains(text, 'def ', 'func '),
+  *                  SELECT word_grams(split(lower(text), ' '), 8),
   *                  SELECT ... FROM t LATERAL VIEW split_snippets(text, 10)
   */
 object GraftFunctions {
@@ -39,6 +40,10 @@ object GraftFunctions {
   /** Column API for the compiled ASCII-letter presence scan. */
   def hasAsciiLetter(text: Column): Column =
     ExpressionUtils.column(HasAsciiLetter(ExpressionUtils.expression(text)))
+
+  /** Column API for the word `w`-gram builder. */
+  def wordGrams(words: Column, w: Int): Column =
+    ExpressionUtils.column(WordGrams(ExpressionUtils.expression(words), w))
 
   /** Column API for the compiled float-array dot product. */
   def vecDot(a: Column, b: Column): Column =
@@ -94,6 +99,16 @@ object GraftFunctions {
     }
     TopNgramCharFrac(exprs.head, n)
   }
+
+  private[plans] def wordGramsBuilder(exprs: Seq[Expression]): Expression = {
+    require(exprs.length == 2, "word_grams(words, w)")
+    val w = exprs(1) match {
+      case Literal(i: Int, IntegerType) => i
+      case other => throw new IllegalArgumentException(
+        s"word_grams w must be an integer literal, got $other")
+    }
+    WordGrams(exprs.head, w)
+  }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -110,6 +125,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("top_ngram_char_frac"),
       new ExpressionInfo(classOf[TopNgramCharFrac].getName, "top_ngram_char_frac"),
       GraftFunctions.topNgramBuilder))
+    e.injectFunction((
+      FunctionIdentifier("word_grams"),
+      new ExpressionInfo(classOf[WordGrams].getName, "word_grams"),
+      GraftFunctions.wordGramsBuilder))
     e.injectFunction((
       FunctionIdentifier("nfc_normalize"),
       new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),

@@ -572,7 +572,7 @@ class DedupSpec extends AnyFunSuite {
       try {
         val r = Dedup.dedupLinesKeepFirst(docs, "text", "id")
           .filter(F.length(F.col("text")) > 0).collect()
-        Thread.sleep(500)
+        org.apache.spark.ListenerDrain(spark.sparkContext)
         r
       } finally spark.sparkContext.removeSparkListener(listener)
     assert(out.length == 1 && out.head.getLong(0) == 0L,

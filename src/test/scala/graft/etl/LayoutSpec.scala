@@ -25,7 +25,7 @@ class LayoutSpec extends AnyFunSuite {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    try { f; Thread.sleep(500) }
+    try { f; org.apache.spark.ListenerDrain(spark.sparkContext) }
     finally spark.sparkContext.removeSparkListener(listener)
     acc.get()
   }

@@ -140,7 +140,7 @@ class CorpusPrepSpec extends AnyFunSuite {
         }
       }
       spark.sparkContext.addSparkListener(listener)
-      try { f; Thread.sleep(500) } // let queued listener events drain
+      try { f; org.apache.spark.ListenerDrain(spark.sparkContext) }
       finally spark.sparkContext.removeSparkListener(listener)
       counter.get()
     }

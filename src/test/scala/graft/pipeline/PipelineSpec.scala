@@ -229,9 +229,7 @@ class PipelineSpec extends AnyFunSuite {
     try {
       val total = decided.count()
       val keeps = decided.filter(org.apache.spark.sql.functions.col("keep")).count()
-      // listener delivery is async — poll briefly
-      val deadline = System.currentTimeMillis() + 10000
-      while (observed.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      org.apache.spark.ListenerDrain(spark.sparkContext)
       assert(observed.isDefined, "observe metrics not delivered")
       val r = observed.get
       assert(r.getAs[Long]("n_rows") == total)

@@ -74,7 +74,7 @@ class AggregatesSpec extends AnyFunSuite {
         val rws = df.groupBy("band", "bucket")
           .agg(GraftFunctions.smallestKLongs(F.col("id"), 50).as("__ids"))
           .select(F.explode(F.col("__ids")).as("id")).collect()
-        Thread.sleep(500)
+        org.apache.spark.ListenerDrain(spark.sparkContext)
         rws
       } finally spark.sparkContext.removeSparkListener(listener)
     assert(kept.map(_.getLong(0)).toSeq.sorted == (0L until 50L).toSeq)
