@@ -7,13 +7,29 @@ import org.apache.spark.sql.SparkSession
   * threshold, custom function extensions). On a real cluster the same
   * settings go through spark-submit --conf; this is the single place the
   * engine documents them.
+  *
+  * `file://` is served by [[ForkFreeLocalFs]]: without libhadoop (the
+  * Spark distribution ships none) the stock local filesystem forks
+  * `/bin/chmod` for every file and `.crc` sidecar it creates, which made
+  * a local `create` cost milliseconds and the 64-part pipeline sink cost
+  * more than the scoring it follows. Two caveats:
+  *  - sessions built elsewhere (e.g. `graft.Verify`'s own builder) keep
+  *    the stock filesystem and its forks;
+  *  - Hadoop caches filesystems JVM-wide per scheme, so whichever
+  *    configuration first resolves `file://` in a JVM decides the class
+  *    for all later lookups through the cache.
   */
 object GraftSession {
+
+  /** The `file://` implementation setting, shared with the test session. */
+  val LocalFsImpl: (String, String) =
+    "spark.hadoop.fs.file.impl" -> classOf[ForkFreeLocalFs].getName
 
   def builder(cores: Int, appName: String = "graft"): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
       .withExtensions(new graft.plans.GraftExtensions)
+      .config(LocalFsImpl._1, LocalFsImpl._2)
       // shuffle partitions tied to parallelism, not the 200 default
       .config("spark.sql.shuffle.partitions", (cores * 2).toString)
       // AQE: runtime coalescing + skew-join splitting

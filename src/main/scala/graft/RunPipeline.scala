@@ -131,9 +131,8 @@ object RunPipeline {
         val nPairs = graft.dedup.Dedup
           .minhashDupPairs(keptRows, "scrubbed", "id", cacheShingles = true)
           .count()
-        // observe metrics arrive via the (async) listener bus; poll briefly
-        val deadline = System.nanoTime() + 5000000000L
-        while (capped.get() < 0 && System.nanoTime() < deadline) Thread.sleep(20)
+        // observe metrics arrive via the (async) listener bus: drain it
+        org.apache.spark.ListenerDrain(spark.sparkContext)
         s""","near_dup_pairs":$nPairs,"minhash_capped_rows":${capped.get()}"""
       } finally spark.listenerManager.unregister(listener)
     } else ""

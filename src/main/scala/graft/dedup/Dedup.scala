@@ -756,7 +756,11 @@ object Dedup {
     * per id — is eagerly materialized via localCheckpoint, after which
     * the shingle cache and the bloom broadcast are dead weight and are
     * released in the finally, instead of accumulating executor cache and
-    * broadcast memory across calls in a long-lived session. */
+    * broadcast memory across calls in a long-lived session. The
+    * `localCheckpoint`ed id list lives in executor block storage only and
+    * has no lineage back to the released inputs: it does not survive the
+    * loss of an executor holding it, and re-running the operator is the
+    * recovery path. */
   def decontaminateBloom(corpus: DataFrame, textCol: String, idCol: String,
                          benchmark: DataFrame, benchTextCol: String,
                          w: Int = 8, fpp: Double = 0.01,

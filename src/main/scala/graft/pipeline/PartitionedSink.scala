@@ -27,6 +27,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
   *
   * Uses the Hadoop FileSystem API throughout, so the same code runs on
   * HDFS / object stores on a real cluster.
+  *
+  * Cost: on a local filesystem the expensive operation is `create` (one
+  * per data file, `.crc` sidecar and manifest), not rename or status
+  * calls; `GraftSession` serves `file://` with [[graft.ForkFreeLocalFs]]
+  * so a create no longer forks `chmod`. The commit protocol is the same
+  * on every filesystem: data files first, then per-part manifests written
+  * to a temp file and renamed into place.
   */
 object PartitionedSink {
 
@@ -129,12 +136,13 @@ object PartitionedSink {
       if (writtenParts.isEmpty) Seq.empty[PartManifest]
       else {
         // an all-rows-filtered write leaves only _SUCCESS: no part dirs,
-        // nothing to manifest (schema inference would fail on zero files)
+        // nothing to manifest and no job to run
         val anyPartDir = writtenParts.exists(pnum =>
           f.exists(new Path(s"$outDir/data/part=$pnum")))
         if (!anyPartDir) Seq.empty[PartManifest]
         else {
-          val landed = spark.read.parquet(s"$outDir/data")
+          // read with the schema just written: no footer-inference job
+          val landed = spark.read.schema(withPart.schema).parquet(s"$outDir/data")
             .filter(F.col("part").isin(writtenParts.toSeq: _*))
           landed.groupBy("part").agg(
             F.count(F.lit(1)).as("nRows"),

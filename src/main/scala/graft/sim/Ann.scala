@@ -25,7 +25,12 @@ object Ann {
     * function chain, whose lambda bodies were interpreted per element).
     * All math in double (floats promoted first) for cross-engine parity;
     * zero-norm rows (or a zero query) must rank last at -1.0, not
-    * NaN-first (Spark sorts NaN above every double). */
+    * NaN-first (Spark sorts NaN above every double).
+    *
+    * Edge contract (pinned in AnnSpec): a row whose length differs from
+    * the query's — an empty array included — or a null row is NULL; a
+    * zero-norm row of matching length is -1.0; a zero or empty query is
+    * the constant -1.0 on every row, whatever the row's length. */
   def cosineTo(emb: Column, q: Array[Float]): Column = {
     val qD = q.map(_.toDouble)
     val qNorm = math.sqrt(qD.map(x => x * x).sum)
@@ -66,7 +71,10 @@ object Ann {
     * One compiled per-row kernel (`VecKernels.int8CosineToQ`) — the
     * expression form paid the interpreted-HOF walk AND re-evaluated the
     * `codes` subtree (with its embedded maxAbs aggregate) separately
-    * inside the dot, the norm, and the guard. */
+    * inside the dot, the norm, and the guard. Same edge contract as
+    * `cosineTo`: NULL on a length mismatch (empty rows included) or a
+    * null row, -1.0 for an all-zero row of matching length, the constant
+    * -1.0 for a zero or empty query. */
   def int8CosineTo(emb: Column, q: Array[Float]): Column = {
     val qCodes = int8Codes(q)
     val qNorm = math.sqrt(qCodes.map(x => x * x).sum)

@@ -1,5 +1,6 @@
 package graft.sim
 
+import org.apache.spark.sql.{functions => F}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -119,6 +120,31 @@ class AnnSpec extends AnyFunSuite {
     val codes = Ann.int8Codes(q)
     assert(codes.forall(c => c == math.rint(c) && math.abs(c) <= 127.0))
     assert(Ann.int8Codes(Array.fill(4)(0.0f)).forall(_ == 0.0))
+  }
+
+  test("cosineTo / int8CosineTo edge contract: NULL on a length mismatch, -1.0 for zero norms") {
+    import spark.implicits._
+    val q = Array(1.0f, 2.0f, 3.0f)
+    val df = Seq[(Long, Array[Float])](
+      (0L, Array(1.0f, 2.0f, 3.0f)), // matching length
+      (1L, Array(0.0f, 0.0f, 0.0f)), // matching length, zero norm
+      (2L, Array(1.0f, 2.0f)),       // ragged
+      (3L, Array.empty[Float]),      // empty
+      (4L, null),
+    ).toDF("id", "emb")
+    def eval(c: org.apache.spark.sql.Column): Map[Long, Option[Double]] =
+      df.select(F.col("id"), c).collect()
+        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
+    for ((name, cos) <- Seq[(String, (org.apache.spark.sql.Column, Array[Float]) => org.apache.spark.sql.Column)](
+        "cosineTo" -> Ann.cosineTo, "int8CosineTo" -> Ann.int8CosineTo)) {
+      val got = eval(cos(F.col("emb"), q))
+      assert(math.abs(got(0L).get - 1.0) < 1e-12, name)
+      assert(got(1L) == Some(-1.0), name)
+      assert(Seq(2L, 3L, 4L).forall(got(_).isEmpty), s"$name: $got")
+      // a zero (or empty) query is the constant -1.0 on every row, whatever its length
+      for (zq <- Seq(Array(0.0f, 0.0f, 0.0f), Array.empty[Float]))
+        assert(eval(cos(F.col("emb"), zq)).values.forall(_ == Some(-1.0)), name)
+    }
   }
 
   test("cosine dup pairs: zero-norm rows rank as -1.0, never NaN") {
