@@ -18,6 +18,15 @@ import org.apache.spark.sql.SparkSession
   *  - Hadoop caches filesystems JVM-wide per scheme, so whichever
   *    configuration first resolves `file://` in a JVM decides the class
   *    for all later lookups through the cache.
+  *
+  * Listing a table with more partition dirs than
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) runs as a
+  * Spark job with one task per dir, up to
+  * `spark.sql.sources.parallelPartitionDiscovery.parallelism` (10000). The
+  * pipeline sink's re-read of its 64 `part=N` dirs paid a 64-task job for
+  * that; the parallelism is tied to the cores instead ([[ListingParallelism]]).
+  * The threshold stays: raising it would list every dir serially on the
+  * driver, which on object stores is the slow path.
   */
 object GraftSession {
 
@@ -25,11 +34,17 @@ object GraftSession {
   val LocalFsImpl: (String, String) =
     "spark.hadoop.fs.file.impl" -> classOf[ForkFreeLocalFs].getName
 
+  /** The parallel partition-discovery width setting, shared with the test
+    * session; both set it to their cores: one listing task per core, not
+    * one per dir. */
+  val ListingParallelism: String = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+
   def builder(cores: Int, appName: String = "graft"): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
       .withExtensions(new graft.plans.GraftExtensions)
       .config(LocalFsImpl._1, LocalFsImpl._2)
+      .config(ListingParallelism, cores.toString)
       // shuffle partitions tied to parallelism, not the 200 default
       .config("spark.sql.shuffle.partitions", (cores * 2).toString)
       // AQE: runtime coalescing + skew-join splitting

@@ -36,20 +36,26 @@ final case class NGramModel(
     logProbT(bucket * classes.length + classIdx).toDouble
 
   /** Per-class log-scores of an ALREADY-LOWERCASED text. Allocation-free
-    * except the score array: n-gram occurrences are streamed straight into
-    * the per-class accumulators (score = prior + Σ_occurrence logProb) —
-    * no count map, which matters at 10^12 rows. */
+    * except the score arrays and one row buffer: n-gram occurrences are
+    * streamed straight into the per-class accumulators (score = prior +
+    * Σ_occurrence logProb) — no count map, which matters at 10^12 rows. */
   @transient private lazy val priorF: Array[Float] = logPrior.map(_.toFloat)
 
   def scoresLower(text: String): Array[Double] = {
     val nc = classes.length
     if (text == null) return logPrior.clone()
-    // float accumulators: same element type as the table lets the JIT
-    // vectorize the per-n-gram add loop (double += float blocks SIMD).
-    // Sum magnitudes are ~1e3-1e4 over ~1e3 increments — well inside
-    // float precision for an argmax, and identical on every path (the
-    // sequential oracle runs this same code).
+    // float accumulators, summed per class in n-gram order. Sum magnitudes
+    // are ~1e3-1e4 over ~1e3 increments — well inside float precision for
+    // an argmax, and identical on every path (the sequential oracle runs
+    // this same code).
+    // Each n-gram's row is copied into `row` before the add. C2's SuperWord
+    // (JDK 17) leaves `s(c) += lp(base + c)` scalar (it runs as fast with
+    // -XX:-UseSuperWord): two float arrays read at different offsets may
+    // alias. The alias-free, same-index `s(c) += row(c)` is vectorized.
+    // Same adds in the same order, so scores are bit-identical to the
+    // direct form (NGramKernelSpec).
     val s = priorF.clone()
+    val row = new Array[Float](nc)
     val lp = logProbT
     // cap per-row work: very long rows are scored on a strided sample of
     // positions (~2048 n-grams per n). Keeps worst-case row cost bounded
@@ -63,9 +69,9 @@ final case class NGramModel(
         var h = n.toLong
         var j = i
         while (j < i + n) { h = 31 * h + text.charAt(j); j += 1 }
-        val base = NGramLangId.bucketOf(h, numBuckets) * nc
+        System.arraycopy(lp, NGramLangId.bucketOf(h, numBuckets) * nc, row, 0, nc)
         var c = 0
-        while (c < nc) { s(c) += lp(base + c); c += 1 }
+        while (c < nc) { s(c) += row(c); c += 1 }
         i += stride
       }
       n += 1

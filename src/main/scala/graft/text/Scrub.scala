@@ -259,9 +259,59 @@ object Scrub {
   }
 
   /** Broadcastable deny list; the compiled pattern is rebuilt lazily per
-    * JVM (Pattern itself is not serializable-stable across versions). */
+    * JVM (Pattern itself is not serializable-stable across versions).
+    *
+    * [[mayMatch]] is a cheap gate in front of the regex (most texts hit no
+    * deny word). It is exact — it never skips a text the regex would
+    * match — because `(?i)` without `UNICODE_CASE` folds ASCII letters
+    * only: a regex match of word `w` at position `i` means every char of
+    * the text there equals the char of `w` or is its other-case ASCII
+    * letter. So the text char at `i` equals `w`'s first char up to ASCII
+    * case (the first-char table), and `regionMatches(ignoreCase = true)`,
+    * whose per-char Unicode folding is a superset of ASCII folding, holds
+    * on the whole word. A text char at or above 128 can only start a word
+    * whose first char is that same char, which is compared exactly. */
   final class DenyList(val words: Seq[String]) extends Serializable {
     @transient lazy val pattern: Pattern = compileDenyList(words)
+
+    // words by ASCII-folded first char: 'F' and 'f' share one entry
+    @transient private lazy val byAsciiFirst: Array[Array[String]] =
+      Array.tabulate(128) { c =>
+        words.filter(w => w.nonEmpty && w.charAt(0) < 128 &&
+          Character.toLowerCase(w.charAt(0)) == Character.toLowerCase(c)).toArray
+      }
+    @transient private lazy val nonAsciiFirst: Array[String] =
+      words.filter(w => w.nonEmpty && w.charAt(0) >= 128).toArray
+    // an empty word matches at any word boundary: never gate
+    @transient private lazy val hasEmpty: Boolean = words.exists(_.isEmpty)
+
+    /** False only when no deny word can match anywhere in `text`. */
+    private[text] def mayMatch(text: String): Boolean = {
+      if (hasEmpty) return true
+      val table = byAsciiFirst
+      val other = nonAsciiFirst
+      var i = 0
+      while (i < text.length) {
+        val c = text.charAt(i)
+        if (c < 128) {
+          val ws = table(c)
+          var k = 0
+          while (k < ws.length) {
+            if (text.regionMatches(true, i, ws(k), 0, ws(k).length)) return true
+            k += 1
+          }
+        } else {
+          var k = 0
+          while (k < other.length) {
+            val w = other(k)
+            if (w.charAt(0) == c && text.regionMatches(true, i, w, 0, w.length)) return true
+            k += 1
+          }
+        }
+        i += 1
+      }
+      false
+    }
   }
 
   val defaultDenyList: DenyList = new DenyList(Seq(
@@ -271,6 +321,7 @@ object Scrub {
   /** Mask every deny-list hit; returns (scrubbed, hits). */
   def scrubDenyList(text: String, deny: DenyList): (String, Int) = {
     if (text == null) return (null, 0)
+    if (!deny.mayMatch(text)) return (text, 0)
     val m = deny.pattern.matcher(text)
     if (!m.find()) return (text, 0)
     var hits = 0

@@ -12,6 +12,7 @@ object SparkTestSession {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .config(GraftSession.LocalFsImpl._1, GraftSession.LocalFsImpl._2)
+    .config(GraftSession.ListingParallelism, "4")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_wh").toString)
     .getOrCreate()
