@@ -27,6 +27,24 @@ import org.apache.spark.sql.SparkSession
   * that; the parallelism is tied to the cores instead ([[ListingParallelism]]).
   * The threshold stays: raising it would list every dir serially on the
   * driver, which on object stores is the slow path.
+  *
+  * Spark keeps the Janino-compiled classes of generated code in one LRU
+  * cache per JVM, `spark.sql.codegen.cache.maxEntries` entries (default
+  * 100). The query catalogue needs about ten times that: a pass over all
+  * 97 `SparkEntry.queries` compiles ≈1020 distinct classes (1014–1021
+  * measured at sf0.01 and sf0.1), and the benchmark's three
+  * corpus-operator queries 132 (q84 63, q42 33, q83 36). At 100 entries
+  * a class is evicted before it is used again, so every pass that cycles
+  * through the queries recompiles them (≈1.55k classes for the catalogue,
+  * 100–125 for the three), and HotSpot interprets and JITs the reloaded
+  * bytecode afresh.
+  * [[CodegenCacheEntries]] holds about twice the measured working set;
+  * the classes it keeps cost 5–9 MB more metaspace. Two caveats:
+  *  - the cache is JVM-wide and sized once, when the JVM first generates
+  *    code, from a *static* SQL conf: a session built after that, or a
+  *    conf set on a running session, does not resize it;
+  *  - sessions built elsewhere keep 100 entries: `graft.Verify` (the
+  *    frozen correctness dump) and `graft.Explain` (plans only).
   */
 object GraftSession {
 
@@ -39,12 +57,17 @@ object GraftSession {
     * one per dir. */
   val ListingParallelism: String = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
 
+  /** The generated-class cache size setting, shared with the test
+    * session: about twice the ≈1020 classes of the query catalogue. */
+  val CodegenCacheEntries: (String, String) = "spark.sql.codegen.cache.maxEntries" -> "2048"
+
   def builder(cores: Int, appName: String = "graft"): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
       .withExtensions(new graft.plans.GraftExtensions)
       .config(LocalFsImpl._1, LocalFsImpl._2)
       .config(ListingParallelism, cores.toString)
+      .config(CodegenCacheEntries._1, CodegenCacheEntries._2)
       // shuffle partitions tied to parallelism, not the 200 default
       .config("spark.sql.shuffle.partitions", (cores * 2).toString)
       // AQE: runtime coalescing + skew-join splitting

@@ -13,6 +13,7 @@ object SparkTestSession {
     .config("spark.ui.enabled", "false")
     .config(GraftSession.LocalFsImpl._1, GraftSession.LocalFsImpl._2)
     .config(GraftSession.ListingParallelism, "4")
+    .config(GraftSession.CodegenCacheEntries._1, GraftSession.CodegenCacheEntries._2)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_wh").toString)
     .getOrCreate()
