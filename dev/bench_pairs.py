@@ -2,7 +2,7 @@
 """Paired benchmark of this working tree against a parent checkout.
 
     python3 dev/bench_pairs.py --parent DIR --seeds 21-30 [--workloads transcripts corpus_ops]
-                               [--seconds 15] [--log FILE]
+                               [--seconds 15] [--traced K] [--log FILE]
     python3 dev/bench_pairs.py --from-log FILE
 
 For each seed and workload it runs `python3 perfbench/run.py --trace 0` once
@@ -22,8 +22,17 @@ quartiles, how many pairs the change won, and a verdict:
                 parent run
 
 Runs that fail or report `correct: false` or `failed > 0` are counted and
-printed. `--log` appends one JSON line per run, so a summary can be printed
-again with `--from-log` without running anything. Nothing is written under
+printed.
+
+With `--traced K`, after the pairs it runs `--trace 1` K times per side and
+workload, alternating which side goes first, on the first K seeds (cycled).
+It then prints, for every per-layer metric of BENCHMARK.json that is not
+zero on both sides, each side's median over the K runs and its range, so
+the layer that moved (jobs, scheduler gaps, shuffle bytes) is read off the
+same tool as the end-to-end verdict.
+
+`--log` appends one JSON line per run, so a summary can be printed again
+with `--from-log` without running anything. Nothing is written under
 perfbench/; each checkout keeps its own build in its .bench_build/.
 """
 import argparse
@@ -44,9 +53,9 @@ def parse_seeds(spec):
     return seeds
 
 
-def run_once(checkout, workload, seed, seconds):
+def run_once(checkout, workload, seed, seconds, trace=0):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
-           "--seconds", str(seconds), "--trace", "0"]
+           "--seconds", str(seconds), "--trace", str(trace)]
     proc = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
                           stdin=subprocess.DEVNULL, text=True)
     lines = proc.stdout.strip().splitlines()
@@ -88,6 +97,25 @@ def verdict(metric, pairs):
             f"change {cm:10.4g} [{cq1:.4g}, {cq3:.4g}]  wins {wins}/{len(pairs)}  {v}")
 
 
+def summarize_traced(records, metrics):
+    for workload in sorted({r["workload"] for r in records}):
+        runs = {side: [r["result"]["metrics"] for r in records
+                       if r["workload"] == workload and r["side"] == side and r["result"]]
+                for side in ("parent", "change")}
+        print(f"{workload} traced: parent {len(runs['parent'])} runs, "
+              f"change {len(runs['change'])} runs (median [min, max])")
+        if not (runs["parent"] and runs["change"]):
+            continue
+        for m in metrics:
+            vals = {side: [r[m["name"]]["value"] for r in rs if m["name"] in r]
+                    for side, rs in runs.items()}
+            if not (vals["parent"] and vals["change"]) or not any(vals["parent"] + vals["change"]):
+                continue
+            shown = "  ".join(f"{side} {statistics.median(v):10.4g} [{min(v):.4g}, {max(v):.4g}]"
+                              for side, v in vals.items())
+            print(f"  {m['name']:<32} {shown}")
+
+
 def summarize(records, metrics):
     for workload in sorted({r["workload"] for r in records}):
         by_seed = {}
@@ -115,34 +143,53 @@ def main():
     ap.add_argument("--workloads", nargs="+", default=["transcripts", "corpus_ops"])
     ap.add_argument("--seconds", type=int, default=None,
                     help="defaults to run_seconds in BENCHMARK.json")
+    ap.add_argument("--traced", type=int, default=0, metavar="K",
+                    help="after the pairs, K traced runs per side and workload")
     ap.add_argument("--log", help="append one JSON line per run to this file")
     ap.add_argument("--from-log", help="print the summary of a log and exit")
     args = ap.parse_args()
 
     bench = json.loads((ROOT / "BENCHMARK.json").read_text())
     metrics = bench["end_to_end"]
+
+    def report(records):
+        summarize([r for r in records if not r.get("trace")], metrics)
+        traced = [r for r in records if r.get("trace")]
+        if traced:
+            summarize_traced(traced, bench["per_layer"])
+
     if args.from_log:
-        summarize([json.loads(l) for l in Path(args.from_log).read_text().splitlines() if l],
-                  metrics)
+        report([json.loads(l) for l in Path(args.from_log).read_text().splitlines() if l])
         return
     if not (args.parent and args.seeds):
         ap.error("--parent and --seeds are required unless --from-log is given")
     seconds = args.seconds or bench["run_seconds"]
     sides = {"parent": Path(args.parent).resolve(), "change": ROOT}
+    seeds = parse_seeds(args.seeds)
     records = []
-    for i, seed in enumerate(parse_seeds(args.seeds)):
+
+    def run_pair(i, seed, workload, trace):
+        order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
+        for side in order:
+            result = run_once(sides[side], workload, seed, seconds, trace)
+            rec = {"workload": workload, "seed": seed, "side": side, "trace": trace,
+                   "result": result}
+            records.append(rec)
+            shown = ({k: v["value"] for k, v in result["metrics"].items() if v["value"]}
+                     if result else None)
+            print(f"[pairs] {workload} seed {seed} {side} trace {trace}: {shown}",
+                  file=sys.stderr, flush=True)
+            if args.log:
+                with open(args.log, "a") as f:
+                    f.write(json.dumps(rec) + "\n")
+
+    for i, seed in enumerate(seeds):
         for workload in args.workloads:
-            order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
-            for side in order:
-                result = run_once(sides[side], workload, seed, seconds)
-                rec = {"workload": workload, "seed": seed, "side": side, "result": result}
-                records.append(rec)
-                shown = {k: v["value"] for k, v in result["metrics"].items()} if result else None
-                print(f"[pairs] {workload} seed {seed} {side}: {shown}", file=sys.stderr, flush=True)
-                if args.log:
-                    with open(args.log, "a") as f:
-                        f.write(json.dumps(rec) + "\n")
-    summarize(records, metrics)
+            run_pair(i, seed, workload, 0)
+    for i in range(args.traced):
+        for workload in args.workloads:
+            run_pair(i, seeds[i % len(seeds)], workload, 1)
+    report(records)
 
 
 if __name__ == "__main__":

@@ -28,7 +28,7 @@ import graft.quality.Rules
 object SparkEntry {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Tables.read(s, s"$dir/$name.parquet")
 
   // memory-sink names must be unique per active query within a session
   private val streamQuerySeq = new java.util.concurrent.atomic.AtomicLong(0)
@@ -856,7 +856,7 @@ object SparkEntry {
     "q79_stream_quality" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val path = s"$dir/documents.parquet"
-      val schema = s.read.parquet(path).schema
+      val schema = Tables.read(s, path).schema
       val stream = s.readStream.schema(schema).parquet(s"$dir/[d]ocuments.parquet")
       val kept = stream.select(col("doc_id"), col("lang"), gopherPlanted.as("t2"))
         .filter(graft.quality.GopherRules.keep(col("t2")))
@@ -1115,7 +1115,7 @@ object SparkEntry {
     "q44_stream_windowed" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val path = s"$dir/events.parquet"
-      val schema = s.read.parquet(path).schema
+      val schema = Tables.read(s, path).schema
       // the table is a single parquet file; the file-stream source wants a
       // directory base, so address the file through a glob (the non-glob
       // prefix — the sf dir — becomes the base path)
@@ -1153,7 +1153,7 @@ object SparkEntry {
     "q69_stream_dedup" -> ((s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
       val path = s"$dir/events.parquet"
-      val schema = s.read.parquet(path).schema
+      val schema = Tables.read(s, path).schema
       val stream = s.readStream.schema(schema).parquet(s"$dir/[e]vents.parquet")
         .withColumn("ts", col("ts").cast("timestamp"))
         // ~5 copies per key at sf0.01: every (event_type, user_id mod 100)

@@ -895,18 +895,14 @@ object Dedup {
     * id-partitioning is reused by the final per-doc sum (no extra
     * exchange).
     *
-    * Gram-count tier (the q71 bloom pattern — hash prefilter, EXACT
-    * confirm): the dominant shuffle used to move every gram as its full
-    * ~8-word STRING into the count aggregate. Counting now runs on
-    * xxhash64(gram) — 8 bytes per key, ~6× fewer shuffle bytes — and
-    * only grams whose HASH count clears `minCount` (a superset of the
-    * truly duplicated grams: hash count >= string count, no false
-    * negatives) are re-counted by EXACT string to confirm. A hash
-    * collision can only promote a gram into the (small) confirm set,
-    * where the exact count rejects it — results are identical to the
-    * all-strings count by construction, so the exact-substring stance
-    * (`dropBoilerplateLines`) is preserved without shuffling the gram
-    * text of the (overwhelmingly non-duplicated) corpus.
+    * Grams are counted by their exact string. An xxhash64 pre-count
+    * (count 8-byte hashes, then confirm only the hash-duplicated grams by
+    * string) saved shuffle bytes: 1.5–2.1× at sf0.1, and 0.73 MB of
+    * shuffle write where exact counting writes 1.06 MB on the
+    * benchmark's corpus_ops pass. It cost two Spark jobs per query (the
+    * hash-count stage and its broadcast) and a second tokenize +
+    * `word_grams` + posexplode pass over the corpus, and no wall-time
+    * win showed at sf0.1, so it went.
     *
     * Output: `idCol`, `n_words`, `dup_tokens` (positions covered),
     * `dup_span_frac` = dup_tokens/n_words (0.0 for docs under `w`
@@ -920,13 +916,7 @@ object Dedup {
       .select(F.col(idCol), F.col("__ws"), F.size(F.col("__ws")).as("__n"))
     val grams = base.select(F.col(idCol),
       F.posexplode(wordGrams(F.col("__ws"), w)).as(Seq("__pos", "__g")))
-    val dupHashes = grams.select(F.xxhash64(F.col("__g")).as("__gh"))
-      .groupBy("__gh").agg(F.count(F.lit(1)).as("__hc"))
-      .filter(F.col("__hc") >= minCount)
-      .select("__gh")
-    val dupGrams = grams.select(F.col("__g"), F.xxhash64(F.col("__g")).as("__gh"))
-      .join(dupHashes, Seq("__gh"), "left_semi")
-      .groupBy("__g")
+    val dupGrams = grams.groupBy("__g")
       .agg(F.count(F.lit(1)).as("__c"))
       .filter(F.col("__c") >= minCount)
       .select("__g")
@@ -967,11 +957,9 @@ object Dedup {
     * starts into per-position coverage via max over RANGE [pos-w+1, pos]
     * (closed form — never an explode of the w covered positions per
     * start); the rebuild groupBy reuses the window's id partitioning.
-    * Gram counting uses the hash-prefilter + exact-string-confirm tier
-    * (the `dupSpanStats` note): 8-byte xxhash64 keys through the
-    * dominant count shuffle, exact confirm on the (small) hash-dup
-    * superset — results identical by construction. Integer counts and
-    * byte-exact rebuilt text — SQL-reproducible (q84). */
+    * Grams are counted by exact string (the `dupSpanStats` note on the
+    * dropped hash pre-count). Integer counts and byte-exact rebuilt
+    * text — SQL-reproducible (q84). */
   def dropDupSpans(docs: DataFrame, textCol: String, idCol: String,
                    w: Int = 8, minCount: Long = 2): DataFrame = {
     require(w >= 2, s"gram width w must be >= 2, got $w")
@@ -988,14 +976,7 @@ object Dedup {
         F.posexplode(F.arrays_zip(F.col("__ws"), F.col("__gs"))).as(Seq("__pos", "__t")))
       .select(F.col(idCol), F.col("__pos"),
         F.col("__t").getField("__ws").as("__w"), F.col("__t").getField("__gs").as("__g"))
-    val gramsOnly = tok.filter(F.col("__g").isNotNull)
-    val dupHashes = gramsOnly.select(F.xxhash64(F.col("__g")).as("__gh"))
-      .groupBy("__gh").agg(F.count(F.lit(1)).as("__hc"))
-      .filter(F.col("__hc") >= minCount)
-      .select("__gh")
-    val dupGrams = gramsOnly
-      .select(F.col("__g"), F.xxhash64(F.col("__g")).as("__gh"))
-      .join(dupHashes, Seq("__gh"), "left_semi")
+    val dupGrams = tok.filter(F.col("__g").isNotNull)
       .groupBy("__g").agg(F.count(F.lit(1)).as("__c"))
       .filter(F.col("__c") >= minCount)
       .select(F.col("__g"), F.lit(1).as("__d"))

@@ -61,18 +61,21 @@ object LmScore {
     * `n_tokens`, `sum_bits` = Σ (bits(total) - bits(cnt(w))), `mean_bits`
     * = sum/n (0.0 for empty docs). Tokens absent from `counts` (scoring a
     * NEW batch against a standing vocabulary) take cnt = 1, i.e. maximum
-    * surprisal — add-one in spirit, still integer-exact. */
+    * surprisal — add-one in spirit, still integer-exact. bits(cnt) is a
+    * column of the vocabulary and bits(total) of the one-row total, so
+    * each is computed once, not per token; an absent token subtracts
+    * bits(1) = 0. */
   def scoreQuantizedBits(docs: DataFrame, textCol: String, idCol: String,
                          counts: DataFrame,
                          broadcastVocab: Boolean = true): DataFrame = {
-    val vocab = if (broadcastVocab) F.broadcast(counts) else counts
-    val total = F.broadcast(counts.agg(F.sum("cnt").as("__total")))
+    val wordBits = counts.select(F.col("word"), bits(F.col("cnt")).as("__wb"))
+    val vocab = if (broadcastVocab) F.broadcast(wordBits) else wordBits
+    val total = F.broadcast(counts.agg(bits(F.sum("cnt")).as("__tb")))
     val tok = docs.select(F.col(idCol), F.explode(tokens(F.col(textCol))).as("word"))
     val scored = tok.join(vocab, Seq("word"), "left")
       .crossJoin(total)
       .select(F.col(idCol),
-        (bits(F.col("__total")) - bits(F.coalesce(F.col("cnt"), F.lit(1L))))
-          .as("__bits"))
+        (F.col("__tb") - F.coalesce(F.col("__wb"), F.lit(0L))).as("__bits"))
       .groupBy(idCol)
       .agg(F.count(F.lit(1)).as("n_tokens"), F.sum("__bits").as("sum_bits"))
     docs.select(F.col(idCol)).join(scored, Seq(idCol), "left")
@@ -101,24 +104,25 @@ object LmScore {
     * `scoreQuantizedBits` stance.
     *
     * Scale shape: both count tables broadcast by default (vocabularies
-    * are Heaps-law sublinear); the two one-row totals ride ONE broadcast
-    * cross join. One token explode, one map-side-combined per-doc sum. */
+    * are Heaps-law sublinear) with bits(cnt) as a column; the two one-row
+    * totals, as bits, ride ONE broadcast cross join. One token explode,
+    * one map-side-combined per-doc sum. */
   def importanceBits(docs: DataFrame, textCol: String, idCol: String,
                      targetCounts: DataFrame, rawCounts: DataFrame,
                      broadcastVocab: Boolean = true): DataFrame = {
-    val t = targetCounts.select(F.col("word"), F.col("cnt").as("__ct"))
-    val r = rawCounts.select(F.col("word"), F.col("cnt").as("__cr"))
+    val t = targetCounts.select(F.col("word"), bits(F.col("cnt")).as("__bt"))
+    val r = rawCounts.select(F.col("word"), bits(F.col("cnt")).as("__br"))
     val tv = if (broadcastVocab) F.broadcast(t) else t
     val rv = if (broadcastVocab) F.broadcast(r) else r
     val totals = F.broadcast(
-      targetCounts.agg(F.sum("cnt").as("__tt"))
-        .crossJoin(rawCounts.agg(F.sum("cnt").as("__tr"))))
+      targetCounts.agg(bits(F.sum("cnt")).as("__btt"))
+        .crossJoin(rawCounts.agg(bits(F.sum("cnt")).as("__btr"))))
     val tok = docs.select(F.col(idCol), F.explode(tokens(F.col(textCol))).as("word"))
     val scored = tok.join(tv, Seq("word"), "left").join(rv, Seq("word"), "left")
       .crossJoin(totals)
       .select(F.col(idCol),
-        ((bits(F.coalesce(F.col("__ct"), F.lit(1L))) - bits(F.col("__tt")))
-          - (bits(F.coalesce(F.col("__cr"), F.lit(1L))) - bits(F.col("__tr"))))
+        ((F.coalesce(F.col("__bt"), F.lit(0L)) - F.col("__btt"))
+          - (F.coalesce(F.col("__br"), F.lit(0L)) - F.col("__btr")))
           .as("__b"))
       .groupBy(idCol)
       .agg(F.count(F.lit(1)).as("n_tokens"), F.sum("__b").as("sum_bits_diff"))

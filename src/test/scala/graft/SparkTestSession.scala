@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all Spark-backed suites. */
@@ -19,4 +23,20 @@ object SparkTestSession {
     .getOrCreate()
 
   spark.sparkContext.setLogLevel("ERROR")
+
+  /** Runs `body` and returns the Spark jobs it started; the listener bus
+    * is drained before and after, so every job event is counted. */
+  def jobsOf(body: => Unit): Long = {
+    val jobs = new AtomicLong(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      ListenerDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
 }

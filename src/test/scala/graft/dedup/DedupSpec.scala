@@ -584,13 +584,12 @@ class DedupSpec extends AnyFunSuite {
         s"aggregation should bound this near the map-partition count, not $n)")
   }
 
-  test("dup-span gram counting: hash prefilter + exact confirm matches an all-strings count") {
+  test("dupSpanStats matches an all-strings gram count") {
     import spark.implicits._
     // randomized corpus with planted cross-doc and within-doc dup grams;
-    // the reference below is the former shape — count EVERY gram by its
-    // full string — and the shipped hash-prefiltered tier must match it
-    // row-for-row (no false negatives by construction; collisions only
-    // promote grams into the exact confirm, which rejects them)
+    // the reference below counts EVERY gram by its full string with the
+    // built-in array functions (no `word_grams` kernel), and the shipped
+    // operator must match it row-for-row
     val r = new java.util.Random(7L)
     val vocab = (0 until 200).map(i => s"t$i")
     val phrase = (0 until 8).map(i => s"dup$i").mkString(" ")
@@ -622,6 +621,47 @@ class DedupSpec extends AnyFunSuite {
       .select(F.col("id"), F.col("__n").cast("long"),
         F.coalesce(F.col("__dup"), F.lit(0L)))
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSet
+    assert(got == want, s"engine-only=${got -- want}, reference-only=${want -- got}")
+  }
+
+  test("dropDupSpans matches an all-strings gram count") {
+    import spark.implicits._
+    // randomized mixed-case corpus with planted cross-doc, within-doc and
+    // overlapping dup spans, short docs and ragged whitespace; the
+    // reference counts every lowered gram by its full string on the
+    // driver, marks the w positions of each duplicated gram and rebuilds
+    // the surviving original-case words
+    val w = 8
+    val r = new java.util.Random(11L)
+    val vocab = (0 until 150).map(i => if (i % 3 == 0) s"T$i" else s"t$i")
+    val phrase = (0 until 10).map(i => s"Dup$i")
+    val docs = (0L until 80L).map { i =>
+      val body = (0 until r.nextInt(40)).map(_ => vocab(r.nextInt(vocab.length)))
+      val words = (i % 7) match {
+        case 1 => body ++ phrase                            // cross-doc
+        case 2 => phrase.map(_.toUpperCase) ++ body ++ phrase // within-doc, case-insensitive
+        case 3 => body.take(3) ++ phrase.drop(2) ++ body    // overlapping span
+        case _ => body
+      }
+      (i, words.mkString(if (i % 4 == 0) "  \t" else " "))
+    }
+    val df = docs.toDF("id", "text")
+    val got = Dedup.dropDupSpans(df, "text", "id", w = w)
+      .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getString(3))).toSet
+    val split = docs.map { case (id, text) => id -> text.split("\\s+").filter(_.nonEmpty) }
+    def grams(ws: Array[String]) = ws.map(_.toLowerCase).sliding(w).filter(_.length == w)
+      .map(_.mkString(" ")).toSeq
+    val dup = split.flatMap { case (_, ws) => grams(ws) }
+      .groupBy(identity).collect { case (g, occ) if occ.size >= 2 => g }.toSet
+    val want = split.map { case (id, ws) =>
+      val covered = new Array[Boolean](ws.length)
+      if (ws.length >= w) grams(ws).zipWithIndex.foreach { case (g, i) =>
+        if (dup(g)) (i until i + w).foreach(covered(_) = true)
+      }
+      val kept = ws.indices.filterNot(covered(_)).map(ws(_))
+      (id, ws.length.toLong, kept.length.toLong, kept.mkString(" "))
+    }.toSet
+    assert(dup.nonEmpty && want.exists { case (_, n, k, _) => k < n }, "the corpus must plant dups")
     assert(got == want, s"engine-only=${got -- want}, reference-only=${want -- got}")
   }
 

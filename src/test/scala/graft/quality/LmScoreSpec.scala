@@ -1,7 +1,7 @@
 package graft.quality
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.{DataFrame, functions => F}
 
 import graft.SparkTestSession
 
@@ -109,5 +109,87 @@ class LmScoreSpec extends AnyFunSuite {
     val prose = scored.filter(F.col("id") % 10 =!= 0).agg(F.max("mean_bits")).head().getDouble(0)
     assert(salad > prose,
       s"every salad doc ($salad) must out-surprise every prose doc ($prose)")
+  }
+
+  /** The former per-token forms: `bits` of every token's count and of
+    * the total, per token. The shipped operators compute each once per
+    * vocabulary word and must give bit-equal rows. */
+  private def formerQuantizedBits(docs: DataFrame, counts: DataFrame,
+                                  broadcastVocab: Boolean): DataFrame = {
+    val vocab = if (broadcastVocab) F.broadcast(counts) else counts
+    val total = F.broadcast(counts.agg(F.sum("cnt").as("__total")))
+    val tok = docs.select(F.col("id"), F.explode(LmScore.tokens(F.col("text"))).as("word"))
+    val scored = tok.join(vocab, Seq("word"), "left")
+      .crossJoin(total)
+      .select(F.col("id"),
+        (LmScore.bits(F.col("__total")) - LmScore.bits(F.coalesce(F.col("cnt"), F.lit(1L))))
+          .as("__bits"))
+      .groupBy("id")
+      .agg(F.count(F.lit(1)).as("n_tokens"), F.sum("__bits").as("sum_bits"))
+    docs.select(F.col("id")).join(scored, Seq("id"), "left")
+      .select(F.col("id"),
+        F.coalesce(F.col("n_tokens"), F.lit(0L)).as("n_tokens"),
+        F.coalesce(F.col("sum_bits"), F.lit(0L)).as("sum_bits"),
+        F.when(F.coalesce(F.col("n_tokens"), F.lit(0L)) === 0, 0.0)
+          .otherwise(F.col("sum_bits").cast("double")
+            / F.col("n_tokens").cast("double")).as("mean_bits"))
+  }
+
+  private def formerImportanceBits(docs: DataFrame, targetCounts: DataFrame,
+                                   rawCounts: DataFrame, broadcastVocab: Boolean): DataFrame = {
+    val t = targetCounts.select(F.col("word"), F.col("cnt").as("__ct"))
+    val r = rawCounts.select(F.col("word"), F.col("cnt").as("__cr"))
+    val tv = if (broadcastVocab) F.broadcast(t) else t
+    val rv = if (broadcastVocab) F.broadcast(r) else r
+    val totals = F.broadcast(
+      targetCounts.agg(F.sum("cnt").as("__tt"))
+        .crossJoin(rawCounts.agg(F.sum("cnt").as("__tr"))))
+    val tok = docs.select(F.col("id"), F.explode(LmScore.tokens(F.col("text"))).as("word"))
+    val scored = tok.join(tv, Seq("word"), "left").join(rv, Seq("word"), "left")
+      .crossJoin(totals)
+      .select(F.col("id"),
+        ((LmScore.bits(F.coalesce(F.col("__ct"), F.lit(1L))) - LmScore.bits(F.col("__tt")))
+          - (LmScore.bits(F.coalesce(F.col("__cr"), F.lit(1L))) - LmScore.bits(F.col("__tr"))))
+          .as("__b"))
+      .groupBy("id")
+      .agg(F.count(F.lit(1)).as("n_tokens"), F.sum("__b").as("sum_bits_diff"))
+    docs.select(F.col("id")).join(scored, Seq("id"), "left")
+      .select(F.col("id"),
+        F.coalesce(F.col("n_tokens"), F.lit(0L)).as("n_tokens"),
+        F.coalesce(F.col("sum_bits_diff"), F.lit(0L)).as("sum_bits_diff"),
+        F.when(F.coalesce(F.col("n_tokens"), F.lit(0L)) === 0, 0.0)
+          .otherwise(F.col("sum_bits_diff").cast("double")
+            / F.col("n_tokens").cast("double")).as("mean_bits_diff"))
+  }
+
+  test("bits once per vocabulary word: bit-equal to the per-token form on random corpora") {
+    import spark.implicits._
+    def rows(df: DataFrame) = df.collect().map(r =>
+      (r.getLong(0), r.getLong(1), r.getLong(2), java.lang.Double.doubleToRawLongBits(r.getDouble(3)))).toSet
+    Seq(3L, 17L, 29L).foreach { seed =>
+      val rnd = new java.util.Random(seed)
+      // Zipf-ish draws over 300 words, so counts span many powers of two
+      def text(): String = rnd.nextInt(12) match {
+        case 0 => null
+        case 1 => ""
+        case 2 => "  \t "
+        case _ => Seq.fill(1 + rnd.nextInt(30))(s"W${(300 * math.pow(rnd.nextDouble(), 3)).toInt}")
+          .mkString(if (rnd.nextBoolean()) " " else "  ")
+      }
+      val docs = (0L until 200L).map(i => (i, text())).toDF("id", "text")
+      // a standing vocabulary from another corpus: some tokens are absent
+      val standing = (0L until 100L).map(i => (i, text())).toDF("id", "text")
+      val own = LmScore.unigramCounts(docs, "text")
+      val other = LmScore.unigramCounts(standing, "text")
+      Seq(true, false).foreach { b =>
+        Seq(own, other).foreach { counts =>
+          assert(rows(LmScore.scoreQuantizedBits(docs, "text", "id", counts, b)) ==
+            rows(formerQuantizedBits(docs, counts, b)), s"seed $seed broadcast $b")
+        }
+        val tc = LmScore.unigramCounts(docs.filter(F.col("id") % 3 === 0), "text")
+        assert(rows(LmScore.importanceBits(docs, "text", "id", tc, other, b)) ==
+          rows(formerImportanceBits(docs, tc, other, b)), s"DSIR seed $seed broadcast $b")
+      }
+    }
   }
 }
