@@ -24,6 +24,15 @@ quartiles, how many pairs the change won, and a verdict:
 Runs that fail or report `correct: false` or `failed > 0` are counted and
 printed.
 
+Before the pairs, each checkout is prepared so that no pair pays for a build
+or a class-data-sharing dump. `perfbench/run.py` maps `.bench_build/classes.jsa`,
+which is tied to the jars it was dumped against; an sbt command that
+repackaged an in-checkout jar since (`target/...jar`, listed in
+`.bench_build/classpath.txt`) makes the JVM drop it silently, and the first
+session start of every run slows by seconds. A stale archive is deleted, and
+then one untimed throwaway run per side and workload rebuilds what is
+missing and dumps the archive again; both are reported on stderr.
+
 With `--traced K`, after the pairs it runs `--trace 1` K times per side and
 workload, alternating which side goes first, on the first K seeds (cycled).
 It then prints, for every per-layer metric of BENCHMARK.json that is not
@@ -37,6 +46,7 @@ perfbench/; each checkout keeps its own build in its .bench_build/.
 """
 import argparse
 import json
+import os
 import statistics
 import subprocess
 import sys
@@ -64,6 +74,38 @@ def run_once(checkout, workload, seed, seconds, trace=0):
     except ValueError:
         result = None
     return result
+
+
+def drop_stale_cds(checkout):
+    """Deletes the checkout's class-data-sharing archive if an in-checkout jar
+    on the runner's classpath is newer than it; returns whether it did."""
+    state = checkout / ".bench_build"
+    jsa, cp_file = state / "classes.jsa", state / "classpath.txt"
+    if not (jsa.exists() and cp_file.exists()):
+        return False
+    dumped = jsa.stat().st_mtime
+    for entry in cp_file.read_text().strip().split(os.pathsep):
+        jar = Path(entry)
+        if (jar.suffix == ".jar" and jar.is_relative_to(checkout) and jar.exists()
+                and jar.stat().st_mtime > dumped):
+            jsa.unlink()
+            return True
+    return False
+
+
+def prepare(sides, workloads, seed, seconds):
+    """Makes each checkout's next runs start from a current build and archive:
+    drops a stale archive, then runs every workload once and discards it."""
+    for side, checkout in sides.items():
+        if drop_stale_cds(checkout):
+            print(f"[pairs] {side}: deleted .bench_build/classes.jsa, older than a jar it maps",
+                  file=sys.stderr, flush=True)
+        for workload in workloads:
+            print(f"[pairs] {side}: untimed throwaway run of {workload} (seed {seed}) before the pairs",
+                  file=sys.stderr, flush=True)
+            if run_once(checkout, workload, seed, seconds) is None:
+                print(f"[pairs] {side}: the throwaway run of {workload} produced no result",
+                      file=sys.stderr, flush=True)
 
 
 def quartiles(xs):
@@ -183,6 +225,7 @@ def main():
                 with open(args.log, "a") as f:
                     f.write(json.dumps(rec) + "\n")
 
+    prepare(sides, args.workloads, seeds[0], seconds)
     for i, seed in enumerate(seeds):
         for workload in args.workloads:
             run_pair(i, seed, workload, 0)

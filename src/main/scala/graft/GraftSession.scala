@@ -22,11 +22,12 @@ import org.apache.spark.sql.SparkSession
   * Listing a table with more partition dirs than
   * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) runs as a
   * Spark job with one task per dir, up to
-  * `spark.sql.sources.parallelPartitionDiscovery.parallelism` (10000). The
-  * pipeline sink's re-read of its 64 `part=N` dirs paid a 64-task job for
-  * that; the parallelism is tied to the cores instead ([[ListingParallelism]]).
-  * The threshold stays: raising it would list every dir serially on the
-  * driver, which on object stores is the slow path.
+  * `spark.sql.sources.parallelPartitionDiscovery.parallelism` (10000).
+  * Every reader of the pipeline sink's output lists its 64 `part=N` dirs
+  * (the sink itself does not read them back); the parallelism is tied to
+  * the cores ([[ListingParallelism]]), so that listing is one task per
+  * core, not 64. The threshold stays: raising it would list every dir
+  * serially on the driver, which on object stores is the slow path.
   *
   * Spark keeps the Janino-compiled classes of generated code in one LRU
   * cache per JVM, `spark.sql.codegen.cache.maxEntries` entries (default

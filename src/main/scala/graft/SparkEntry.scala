@@ -288,7 +288,7 @@ object SparkEntry {
         graft.etl.Layout.compact(s, splintered, compacted)
         ()
       }
-      s.read.parquet(compacted)
+      Tables.read(s, compacted)
         .groupBy("lang")
         .agg(count(lit(1)).as("n"), sum("n_chars").as("sum_chars"))
         .orderBy("lang")
@@ -740,7 +740,7 @@ object SparkEntry {
         graft.etl.Layout.writeZOrdered(t(s, dir, "documents"), path,
           numFiles = 8, colA = "doc_id", colB = "n_chars")
       }
-      s.read.parquet(path)
+      Tables.read(s, path)
         .filter(col("n_chars").between(200, 500) && col("doc_id").between(50, 350))
         .groupBy("source")
         .agg(count(lit(1)).as("n"), sum("n_chars").as("sum_chars"))

@@ -1,7 +1,10 @@
 package graft.pipeline
 
+import scala.collection.mutable
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession, functions => F}
+import org.apache.spark.util.AccumulatorV2
 
 /** Partitioned output table with per-partition lineage manifests and
   * counters, resumable by skipping committed partitions (north rule;
@@ -27,6 +30,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
   *
   * Uses the Hadoop FileSystem API throughout, so the same code runs on
   * HDFS / object stores on a real cluster.
+  *
+  * Counters come from the write itself: after `repartition(part)` every
+  * row passes through a [[PartTally]] accumulator in the write job's
+  * result tasks, and the manifests are built from its merged value, with
+  * no job to read the landed files back. The tally counts exactly what
+  * landed:
+  *  - Spark merges a result task's accumulator updates once per output
+  *    partition, and drops those of failed and commit-denied attempts;
+  *  - the v1 `FileOutputCommitter` (Spark's default, left as it is)
+  *    commits a task's files with one rename, and the job's files land
+  *    only at job commit, so an attempt whose updates were dropped left no
+  *    file behind.
   *
   * Cost: on a local filesystem the expensive operation is `create` (one
   * per data file, `.crc` sidecar and manifest), not rename or status
@@ -89,8 +104,10 @@ object PartitionedSink {
 
   /** Write the pipeline output partitioned by conv-hash, skipping
     * partitions already committed (manifest present). Expects the
-    * TranscriptPipeline.decide schema (keep / pii_hits / scrub_error).
-    * Returns the manifests written plus the partitions skipped.
+    * TranscriptPipeline.decide schema (keep / pii_hits / tox_hits /
+    * scrub_error / row_fp).
+    * Returns the manifests written, in part order, plus the partitions
+    * skipped.
     */
   def write(spark: SparkSession, df: DataFrame, outDir: String, nParts: Int): WriteReport = {
     val committed = committedParts(spark, outDir)
@@ -113,52 +130,79 @@ object PartitionedSink {
     // Crash safety: data files without a manifest are uncommitted leftovers
     // of an interrupted run — delete them before appending, otherwise the
     // "resumed" write would duplicate their rows (the manifest, written
-    // last, is the commit point).
+    // last, is the commit point). That includes data/_temporary: the v1
+    // committer's job commit moves every committed-task dir it finds there
+    // into place, those of a job that died before its own commit too.
     val f = fs(spark, outDir)
     (0 until nParts).filterNot(committed.contains).foreach { pnum =>
       val dir = new Path(s"$outDir/data/part=$pnum")
       if (f.exists(dir)) f.delete(dir, true)
     }
+    f.delete(new Path(s"$outDir/data/_temporary"), true)
 
     // One shot: shuffle once on part, write data files per partition dir.
+    // The counters are tallied from the rows as the write's result tasks
+    // pass them on, not read back: Spark keeps the tally of one attempt
+    // per task, the one whose files the v1 committer renamed into place
+    // (see the object's doc). A part with no rows gets no manifest
+    // (recomputed next run, harmless); an all-rows-filtered write leaves
+    // only _SUCCESS and no manifest.
+    val tally = new PartTally(Seq("part", "keep", "pii_hits", "tox_hits", "scrub_error", "row_fp")
+      .map(pending.schema.fieldIndex).toArray)
+    spark.sparkContext.register(tally)
     pending
       .repartition(F.col("part"))
+      .mapPartitions(_.map { r => tally.add(r); r })(Encoders.row(pending.schema))
       .write.mode("append").partitionBy("part")
       .parquet(s"$outDir/data")
 
-    // Counters + input fingerprint per written partition (re-read of the
-    // committed files — counts what actually landed, not what we meant to
-    // write). Written parts = everything not previously committed; an
-    // empty partition simply yields no manifest (recomputed next run,
-    // harmless) — avoids re-running the whole pipeline for a distinct().
-    val writtenParts = (0 until nParts).toSet -- committed.keys
-    val manifests =
-      if (writtenParts.isEmpty) Seq.empty[PartManifest]
-      else {
-        // an all-rows-filtered write leaves only _SUCCESS: no part dirs,
-        // nothing to manifest and no job to run
-        val anyPartDir = writtenParts.exists(pnum =>
-          f.exists(new Path(s"$outDir/data/part=$pnum")))
-        if (!anyPartDir) Seq.empty[PartManifest]
-        else {
-          // read with the schema just written: no footer-inference job
-          val landed = spark.read.schema(withPart.schema).parquet(s"$outDir/data")
-            .filter(F.col("part").isin(writtenParts.toSeq: _*))
-          landed.groupBy("part").agg(
-            F.count(F.lit(1)).as("nRows"),
-            F.sum(F.col("keep").cast("long")).as("nKeep"),
-            F.sum(F.col("pii_hits").cast("long")).as("piiHits"),
-            F.sum(F.col("tox_hits").cast("long")).as("toxHits"),
-            F.sum(F.col("scrub_error").cast("long")).as("scrubErrors"),
-            F.expr("bit_xor(row_fp)").as("fpSum"),
-          ).collect().map { r =>
-            PartManifest(r.getInt(0), nParts, r.getLong(1), r.getLong(2),
-              r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))
-          }.toSeq
-        }
-      }
+    val manifests = tally.value.toSeq.sortBy(_._1).map { case (part, c) =>
+      PartManifest(part, nParts, c(0), c(1), c(2), c(3), c(4), c(5))
+    }
     manifests.foreach(writeManifest(spark, outDir, _))
     WriteReport(manifests, committed.keys.toSeq.sorted)
+  }
+
+  /** Per-part counters of the rows a write's result tasks pass on:
+    * nRows, nKeep, piiHits, toxHits, scrubErrors (booleans count 1, nulls
+    * 0, like `sum` of a cast to long) and the `bit_xor` of `row_fp`.
+    * `cols` are the field indices of part, keep, pii_hits, tox_hits,
+    * scrub_error and row_fp. */
+  private[pipeline] final class PartTally(cols: Array[Int])
+      extends AccumulatorV2[Row, Map[Int, Array[Long]]] {
+    private val parts = mutable.HashMap.empty[Int, Array[Long]]
+
+    override def isZero: Boolean = parts.isEmpty
+    override def copy(): PartTally = {
+      val c = new PartTally(cols)
+      c.merge(this)
+      c
+    }
+    override def reset(): Unit = parts.clear()
+
+    override def add(r: Row): Unit = {
+      val c = parts.getOrElseUpdate(r.getInt(cols(0)), new Array[Long](6))
+      c(0) += 1
+      var i = 1
+      while (i < 5) { c(i) += asLong(r.get(cols(i))); i += 1 }
+      if (!r.isNullAt(cols(5))) c(5) ^= r.getLong(cols(5))
+    }
+
+    override def merge(other: AccumulatorV2[Row, Map[Int, Array[Long]]]): Unit =
+      other.value.foreach { case (part, o) =>
+        val c = parts.getOrElseUpdate(part, new Array[Long](6))
+        var i = 0
+        while (i < 5) { c(i) += o(i); i += 1 }
+        c(5) ^= o(5)
+      }
+
+    override def value: Map[Int, Array[Long]] = parts.toMap
+
+    private def asLong(v: Any): Long = v match {
+      case null => 0L
+      case b: Boolean => if (b) 1L else 0L
+      case n: Number => n.longValue
+    }
   }
 
   /** Input-side pruning for resume: committed partitions can be dropped
