@@ -128,9 +128,7 @@ object RunPipeline {
         val keptRows = spark.read.parquet(output).filter(F.col("keep"))
           .select(F.xxhash64(F.col("conv_id"), F.col("turn_idx")).as("id"),
             F.col("scrubbed"))
-        val nPairs = graft.dedup.Dedup
-          .minhashDupPairs(keptRows, "scrubbed", "id", cacheShingles = true)
-          .count()
+        val nPairs = graft.dedup.Dedup.minhashDupPairs(keptRows, "scrubbed", "id").count()
         // observe metrics arrive via the (async) listener bus: drain it
         org.apache.spark.ListenerDrain(spark.sparkContext)
         s""","near_dup_pairs":$nPairs,"minhash_capped_rows":${capped.get()}"""

@@ -505,12 +505,12 @@ object SparkEntry {
     }),
 
     // MinHash LSH near-dup pairs on planted dups (no SQL oracle).
-    // cacheShingles: the (id, shingle-hashes) projection is persisted so
-    // the text is read and tokenized exactly once (DedupSpec proves the
-    // single scan); without it the plan makes 3 narrow text passes.
+    // minhashDupPairs persists the (id, shingle-hashes) projection, so the
+    // text is read and tokenized exactly once (DedupSpec proves the single
+    // scan).
     "q19_minhash_dups" -> ((s, dir) =>
       graft.dedup.Dedup.minhashDupPairs(docsWithPlantedDups(s, dir), "text", "doc_id",
-          w = 3, k = 32, bands = 16, threshold = 0.5, cacheShingles = true)
+          w = 3, k = 32, bands = 16, threshold = 0.5)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("j6"))
         .orderBy("id_a", "id_b")),
 
@@ -520,8 +520,7 @@ object SparkEntry {
     // recursive-CTE transitive closure over the exact all-pairs truth.
     "q49_dedup_components" -> ((s, dir) => {
       val pairs = graft.dedup.Dedup.minhashDupPairs(docsWithPlantedDups(s, dir),
-        "text", "doc_id", w = 3, k = 32, bands = 16, threshold = 0.5,
-        cacheShingles = true)
+        "text", "doc_id", w = 3, k = 32, bands = 16, threshold = 0.5)
       graft.dedup.Dedup.components(pairs).orderBy("node")
     }),
 

@@ -239,79 +239,115 @@ object Dedup {
     * Bucket sizes are bounded w.h.p.; a hot bucket (degenerate text) is
     * capped at `maxBucket` rows to bound the quadratic blowup, and capping
     * is logged via the dropped-bucket count rather than silently.
-    */
+    *
+    * The signature, the banding, and the exact-Jaccard verify all work
+    * from the shingle-HASH array, so the verify kernel never re-tokenizes
+    * text: at high-recall band settings candidate pairs outnumber rows,
+    * and per-pair string re-shingling dominated the whole operator. The
+    * (id, shingle-hashes) projection is persisted MEMORY_AND_DISK, so the
+    * text is read and tokenized EXACTLY ONCE (an unpersisted projection is
+    * evaluated once per subtree: banding + the two re-attach sides); the
+    * cached arrays are ~1-2% of text size, a fair trade even at 10^12 rows
+    * (spills to local disk, never OOMs). The cache lives until the session
+    * evicts it (LRU) or the caller clears it; eviction only costs
+    * recompute, never correctness. `dropNearDups` owns the lifecycle
+    * itself and unpersists once the pair list is materialized. */
   def minhashDupPairs(df: DataFrame, textCol: String, idCol: String,
                       w: Int = 3, k: Int = 32, bands: Int = 8,
-                      threshold: Double = 0.7, maxBucket: Int = 1000,
-                      cacheShingles: Boolean = false): DataFrame = {
-    // the signature, the banding, and the exact-Jaccard verify all work
-    // from the shingle-HASH array, so the verify kernel never re-tokenizes
-    // text: at high-recall band settings candidate pairs outnumber rows,
-    // and per-pair string re-shingling dominated the whole operator before
-    // this. Without cacheShingles the withSh plan is evaluated once per
-    // subtree — banding + the two re-attach sides — i.e. 3 narrow O(rows)
-    // text passes. With cacheShingles=true the (id, shingle-hashes)
-    // projection is persisted MEMORY_AND_DISK, so the text is read and
-    // tokenized EXACTLY ONCE; the cached arrays are ~1-2% of text size, a
-    // fair trade even at 10^12 rows (spills to local disk, never OOMs).
-    // Lifecycle: the cache lives until the session evicts it (LRU) or the
-    // caller clears it; eviction only costs recompute, never correctness.
-    // (dropNearDups manages the lifecycle itself and unpersists once the
-    // pair list is materialized.)
-    val shPlan = df.select(F.col(idCol),
-      shinglesUdf(F.col(textCol), F.lit(w)).as("__sh"))
-    val withSh =
-      if (cacheShingles)
-        shPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else shPlan
-    minhashPairsFromShingles(withSh, idCol, k, bands, threshold, maxBucket)
-  }
+                      threshold: Double = 0.7, maxBucket: Int = 1000): DataFrame =
+    minhashPairsFromShingles(shingles(df, textCol, idCol, w), idCol, k, bands,
+      threshold, maxBucket)
 
-  /** Core of minhashDupPairs over a prepared (id, __sh shingle-hash array)
-    * frame — split out so callers that persist the shingle projection can
-    * own its lifecycle (dropNearDups unpersists it after the pair list is
-    * materialized). */
-  private def minhashPairsFromShingles(withSh: DataFrame, idCol: String,
-                                       k: Int, bands: Int, threshold: Double,
-                                       maxBucket: Int): DataFrame = {
+  /** The persisted (id, __sh shingle-hash array) projection the minhash
+    * operators band and verify from. */
+  private def shingles(df: DataFrame, textCol: String, idCol: String, w: Int): DataFrame =
+    df.select(F.col(idCol), shinglesUdf(F.col(textCol), F.lit(w)).as("__sh"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** (id, band, bucket) rows of a `shingles` frame: the k-value minhash
+    * split into `bands` slices, each hashed to one bucket. */
+  private def minhashBands(sh: DataFrame, idCol: String, k: Int, bands: Int): DataFrame = {
     val rowsPerBand = k / bands
-    val banded = withSh
-      .withColumn("minhash", minhashOfShinglesUdf(F.col("__sh"), F.lit(k)))
-      .select(
-        F.col(idCol),
+    sh.withColumn("__mh", minhashOfShinglesUdf(F.col("__sh"), F.lit(k)))
+      .select(F.col(idCol),
         F.posexplode(
           F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), b =>
-            F.xxhash64(F.slice(F.col("minhash"), b * rowsPerBand + 1, F.lit(rowsPerBand))))
+            F.xxhash64(F.slice(F.col("__mh"), b * rowsPerBand + 1, F.lit(rowsPerBand))))
         ).as(Seq("band", "bucket")))
-    // cap pathological buckets — NOT silently: the dropped-row count is
-    // published through an observe metric ("minhash_caps"/"capped_rows")
-    // so a capped run is visible in job metrics. The cap is a BOUNDED
-    // smallest-K aggregate (map-side combinable k-heap buffers), not a
-    // Window row_number: the window shape exchanged and SORTED every
-    // banded row with a degenerate corpus's hot bucket concentrating in
-    // one task; the aggregate ships at most maxBucket ids per bucket per
-    // map partition and sorts nothing. Survivor set identical (the
-    // maxBucket smallest ids per (band, bucket)).
-    val capped = banded.groupBy("band", "bucket")
-      .agg(graft.plans.GraftFunctions.smallestKLongs(F.col(idCol), maxBucket).as("__ids"),
-        F.count(F.lit(1)).as("__bn"))
-      .observe("minhash_caps",
-        F.sum(F.greatest(F.col("__bn") - maxBucket, F.lit(0L))).as("capped_rows"))
-      .select(F.col("band"), F.col("bucket"), F.explode(F.col("__ids")).as(idCol))
-    val a = capped.select(F.col("band"), F.col("bucket"), F.col(idCol).as("id_a"))
-    val b = capped.select(F.col("band"), F.col("bucket"), F.col(idCol).as("id_b"))
-    // dedupe candidates on ids BEFORE the exact-Jaccard kernel: a true
-    // near-dup pair collides in many bands and would be verified per band
-    val candidates = a.join(b, Seq("band", "bucket"))
-      .filter(F.col("id_a") < F.col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val ta = withSh.select(F.col(idCol).as("id_a"), F.col("__sh").as("sh_a"))
-    val tb = withSh.select(F.col(idCol).as("id_b"), F.col("__sh").as("sh_b"))
+  }
+
+  /** (id_a, id_b, jaccard) of the candidate pairs whose exact shingle
+    * Jaccard reaches `threshold`: id_a's shingles from `shA`, id_b's from
+    * `shB` (both `shingles` frames), re-attached by two id-joins. */
+  private def jaccardVerified(candidates: DataFrame, shA: DataFrame, shB: DataFrame,
+                              idCol: String, threshold: Double): DataFrame = {
+    val ta = shA.select(F.col(idCol).as("id_a"), F.col("__sh").as("sh_a"))
+    val tb = shB.select(F.col(idCol).as("id_b"), F.col("__sh").as("sh_b"))
     candidates
       .join(ta, "id_a").join(tb, "id_b")
       .select(F.col("id_a"), F.col("id_b"),
         jaccardHashesUdf(F.col("sh_a"), F.col("sh_b")).as("jaccard"))
       .filter(F.col("jaccard") >= threshold)
+  }
+
+  /** Core of minhashDupPairs over a `shingles` frame — split out so
+    * `dropNearDups` can own the shingle cache's lifecycle. */
+  private def minhashPairsFromShingles(withSh: DataFrame, idCol: String,
+                                       k: Int, bands: Int, threshold: Double,
+                                       maxBucket: Int): DataFrame = {
+    // dedupe candidates on ids BEFORE the exact-Jaccard kernel: a true
+    // near-dup pair collides in many bands and would be verified per band
+    val candidates = bucketPairs(minhashBands(withSh, idCol, k, bands),
+      Seq("band", "bucket"), idCol, maxBucket, "minhash_caps").distinct()
+    jaccardVerified(candidates, withSh, withSh, idCol, threshold)
+  }
+
+  /** The hot-bucket cap and candidate pairing of every banded near-dup
+    * operator (minhash, Hamming, incremental, cosine and SemDeDup).
+    *
+    * `banded` has one row per (bucket, id): the `keys` columns name the
+    * bucket, `id` is a long row id and `payload`, when given, a long
+    * column that rides each kept id. Each bucket keeps its `maxBucket`
+    * smallest ids. The cap is a BOUNDED smallest-K aggregate (map-side
+    * combinable k-heap buffers), not a Window row_number: the window
+    * shape exchanged and SORTED every banded row, with a degenerate
+    * corpus's hot bucket concentrated in one task; the aggregate ships at
+    * most `maxBucket` ids per bucket per map partition and sorts nothing.
+    * The cap is NOT silent: the rows it drops are published as
+    * `capped_rows` under the observe name `metric`, so a capped run shows
+    * in the job's metrics.
+    *
+    * Kept ids of one bucket pair up as (id_a, id_b) with id_a < id_b,
+    * plus (pay_a, pay_b) when a payload rides. With `against` — a second
+    * banded frame with the same columns, capped under its own metric —
+    * buckets of `banded` pair with buckets of `against` instead: id_a
+    * from `banded`, id_b from `against`, in either order. A pair that
+    * shares several buckets comes out once per bucket. Only key, id and
+    * payload columns reach the exchange. */
+  private[graft] def bucketPairs(banded: DataFrame, keys: Seq[String], id: String,
+                                 maxBucket: Int, metric: String,
+                                 payload: Option[String] = None,
+                                 against: Option[(DataFrame, String)] = None): DataFrame = {
+    import graft.plans.GraftFunctions.{smallestKLongPairs, smallestKLongs}
+    val keyCols = keys.map(F.col)
+    def capped(df: DataFrame, m: String): DataFrame = {
+      val kept = payload.fold(smallestKLongs(F.col(id), maxBucket))(p =>
+        smallestKLongPairs(F.col(id), F.col(p), maxBucket))
+      df.groupBy(keyCols: _*)
+        .agg(kept.as("__kept"), F.count(F.lit(1)).as("__bn"))
+        .observe(m, F.sum(F.greatest(F.col("__bn") - maxBucket, F.lit(0L))).as("capped_rows"))
+        .select(keyCols :+ F.explode(F.col("__kept")).as("__e"): _*)
+    }
+    def side(c: DataFrame, s: String): DataFrame = c.select(keyCols ++ (payload match {
+      case Some(_) => Seq(F.col("__e.id").as(s"id_$s"), F.col("__e.payload").as(s"pay_$s"))
+      case None => Seq(F.col("__e").as(s"id_$s"))
+    }): _*)
+    val a = capped(banded, metric)
+    val pairs = against match {
+      case None => side(a, "a").join(side(a, "b"), keys).filter(F.col("id_a") < F.col("id_b"))
+      case Some((other, m)) => side(a, "a").join(side(capped(other, m), "b"), keys)
+    }
+    pairs.drop(keys: _*)
   }
 
   /** Connected components over an undirected near-dup pair list — the step
@@ -462,16 +498,9 @@ object Dedup {
   def dropNearDupsBest(df: DataFrame, textCol: String, idCol: String,
                        score: Column,
                        w: Int = 3, k: Int = 32, bands: Int = 8,
-                       threshold: Double = 0.7, maxBucket: Int = 1000): DataFrame = {
-    val withSh = df.select(F.col(idCol),
-        shinglesUdf(F.col(textCol), F.lit(w)).as("__sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val pairs = minhashPairsFromShingles(withSh, idCol, k, bands,
-        threshold, maxBucket)
-      dropByPairsKeepBest(df, pairs, idCol, score)
-    } finally withSh.unpersist(false)
-  }
+                       threshold: Double = 0.7, maxBucket: Int = 1000): DataFrame =
+    dropNearDupsWith(df, textCol, idCol, w, k, bands, threshold, maxBucket)(
+      dropByPairsKeepBest(df, _, idCol, score))
 
   /** The end-to-end near-dup FILTER a training-data pipeline actually
     * runs: detect pairs (minhash LSH over word shingles), cluster, keep
@@ -480,19 +509,21 @@ object Dedup {
     * other detectors (simhash, embedding cosine). */
   def dropNearDups(df: DataFrame, textCol: String, idCol: String,
                    w: Int = 3, k: Int = 32, bands: Int = 8,
-                   threshold: Double = 0.7, maxBucket: Int = 1000): DataFrame = {
-    // own the shingle cache's lifecycle: dropByPairs -> components eagerly
-    // materializes the pair list (localCheckpoint), after which the cached
-    // shingle projection is dead weight — unpersist it here rather than
-    // pinning ~1-2% of corpus text in the session cache until LRU eviction
-    val withSh = df.select(F.col(idCol),
-        shinglesUdf(F.col(textCol), F.lit(w)).as("__sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val pairs = minhashPairsFromShingles(withSh, idCol, k, bands,
-        threshold, maxBucket)
-      dropByPairs(df, pairs, idCol)
-    } finally withSh.unpersist(false)
+                   threshold: Double = 0.7, maxBucket: Int = 1000): DataFrame =
+    dropNearDupsWith(df, textCol, idCol, w, k, bands, threshold, maxBucket)(
+      dropByPairs(df, _, idCol))
+
+  /** minhash pairs handed to `drop`, owning the shingle cache's
+    * lifecycle: the drop tails' `components` eagerly materializes the
+    * pair list (localCheckpoint), after which the cached shingle
+    * projection is dead weight — unpersist it here rather than pinning
+    * ~1-2% of corpus text in the session cache until LRU eviction. */
+  private def dropNearDupsWith(df: DataFrame, textCol: String, idCol: String,
+                               w: Int, k: Int, bands: Int, threshold: Double,
+                               maxBucket: Int)(drop: DataFrame => DataFrame): DataFrame = {
+    val withSh = shingles(df, textCol, idCol, w)
+    try drop(minhashPairsFromShingles(withSh, idCol, k, bands, threshold, maxBucket))
+    finally withSh.unpersist(false)
   }
 
   /** Benchmark DECONTAMINATION: drop every corpus document that shares at
@@ -693,32 +724,16 @@ object Dedup {
     * via the `capMetric` observe metric. */
   def hammingDupPairsOf(df: DataFrame, hashCol: String, idCol: String,
                         maxHamming: Int, maxBucket: Int = 1000,
-                        capMetric: String = "hamming_caps"): DataFrame = {
+                        capMetric: String): DataFrame = {
     val banded = df.select(F.col(idCol), F.col(hashCol),
       F.posexplode(F.array((0 until 4).map(i =>
         F.shiftrightunsigned(F.col(hashCol), i * 16).bitwiseAND(F.lit(0xffffL))): _*))
         .as(Seq("band", "bucket")))
-    // bounded smallest-K cap with the 64-bit hash riding each kept id —
-    // the minhashPairsFromShingles aggregate shape (no window sort, hot
-    // buckets bounded map-side); survivor set identical to row_number<=K
-    val capped = banded.groupBy("band", "bucket")
-      .agg(graft.plans.GraftFunctions.smallestKLongPairs(
-          F.col(idCol), F.col(hashCol), maxBucket).as("__kept"),
-        F.count(F.lit(1)).as("__bn"))
-      .observe(capMetric,
-        F.sum(F.greatest(F.col("__bn") - maxBucket, F.lit(0L))).as("capped_rows"))
-      .select(F.col("band"), F.col("bucket"), F.explode(F.col("__kept")).as("__e"))
-      .select(F.col("band"), F.col("bucket"),
-        F.col("__e").getField("id").as(idCol),
-        F.col("__e").getField("payload").as(hashCol))
-    val a = capped.select(F.col("band"), F.col("bucket"),
-      F.col(idCol).as("id_a"), F.col(hashCol).as("__h_a"))
-    val b = capped.select(F.col("band"), F.col("bucket"),
-      F.col(idCol).as("id_b"), F.col(hashCol).as("__h_b"))
-    a.join(b, Seq("band", "bucket"))
-      .filter(F.col("id_a") < F.col("id_b"))
+    // the 64-bit hash rides each kept id through the cap (bucketPairs)
+    bucketPairs(banded, Seq("band", "bucket"), idCol, maxBucket, capMetric,
+        payload = Some(hashCol))
       .select(F.col("id_a"), F.col("id_b"),
-        F.bit_count(F.col("__h_a").bitwiseXOR(F.col("__h_b"))).as("hamming"))
+        F.bit_count(F.col("pay_a").bitwiseXOR(F.col("pay_b"))).as("hamming"))
       .distinct()
       .filter(F.col("hamming") <= maxHamming)
   }
@@ -855,28 +870,6 @@ object Dedup {
       .drop("__clean")
   }
 
-  /** INCREMENTAL ingest dedup: drop the rows of `batch` that duplicate
-    * the EXISTING `corpus` — exact (identical text fingerprint) or near
-    * (word-`w`-shingle Jaccard >= `threshold` against ANY corpus doc,
-    * candidates via cross-frame minhash banding). Returns the surviving
-    * batch rows with their original columns. The continuous-ingestion
-    * complement to `dropNearDups` (which dedups a corpus against itself):
-    * a crawl refresh or daily dump is deduped against the standing corpus
-    * WITHOUT re-pairing the corpus against itself.
-    *
-    * Scale shape: the corpus side is touched by exactly two
-    * streaming-friendly passes — a fingerprint projection (8 B/row) and a
-    * banded minhash projection (24 B/row/band) — never re-paired with
-    * itself (no corpus×corpus candidates are generated; the band join
-    * keys batch buckets against corpus buckets only). Candidate
-    * (batch_id, corpus_id) pairs attach shingle arrays by id-join and
-    * verify with the exact merge-count Jaccard kernel. Hot buckets are
-    * capped per side with observe metrics (`inc_dedup_caps`). An
-    * exact-identical batch row always collides with its corpus twin in
-    * every band (identical text ⇒ identical signature), so the semantics
-    * need no separate exact tier; the fingerprint anti-join still runs
-    * FIRST because it removes the (typically dominant) exact-dup mass
-    * before the shingle/banding work is spent on it. */
   /** Per-document DUPLICATED-SPAN coverage (Lee et al. 2022's
     * exact-substring dedup measure at word-`w`-gram resolution): the
     * fraction of a document's word positions covered by some `w`-gram
@@ -1042,6 +1035,28 @@ object Dedup {
         F.coalesce(F.col("__nd"), F.lit(0L)).as("n_docs"))
   }
 
+  /** INCREMENTAL ingest dedup: drop the rows of `batch` that duplicate
+    * the EXISTING `corpus` — exact (identical text fingerprint) or near
+    * (word-`w`-shingle Jaccard >= `threshold` against ANY corpus doc,
+    * candidates via cross-frame minhash banding). Returns the surviving
+    * batch rows with their original columns. The continuous-ingestion
+    * complement to `dropNearDups` (which dedups a corpus against itself):
+    * a crawl refresh or daily dump is deduped against the standing corpus
+    * WITHOUT re-pairing the corpus against itself.
+    *
+    * Scale shape: the corpus side is touched by exactly two
+    * streaming-friendly passes — a fingerprint projection (8 B/row) and a
+    * banded minhash projection (24 B/row/band) — never re-paired with
+    * itself (no corpus×corpus candidates are generated; the band join
+    * keys batch buckets against corpus buckets only). Candidate
+    * (batch_id, corpus_id) pairs attach shingle arrays by id-join and
+    * verify with the exact merge-count Jaccard kernel. Hot buckets are
+    * capped per side with observe metrics (`inc_dedup_caps`). An
+    * exact-identical batch row always collides with its corpus twin in
+    * every band (identical text ⇒ identical signature), so the semantics
+    * need no separate exact tier; the fingerprint anti-join still runs
+    * FIRST because it removes the (typically dominant) exact-dup mass
+    * before the shingle/banding work is spent on it. */
   def dedupAgainstCorpus(batch: DataFrame, corpus: DataFrame,
                          textCol: String, idCol: String,
                          w: Int = 3, k: Int = 32, bands: Int = 16,
@@ -1052,42 +1067,19 @@ object Dedup {
     val corpusFp = corpus.select(fp.as("__fp")).distinct()
     val exactSurvivors = batch.withColumn("__fp", fp)
       .join(corpusFp, Seq("__fp"), "left_anti").drop("__fp")
-
-    def shingled(df: DataFrame, outId: String) =
-      df.select(F.col(idCol).as(outId),
-        shinglesUdf(F.col(textCol), F.lit(w)).as(s"__sh_$outId"))
-    def banded(sh: DataFrame, id: String, metric: String) = {
-      val rowsPerBand = k / bands
-      val b = sh
-        .withColumn("__mh", minhashOfShinglesUdf(F.col(s"__sh_$id"), F.lit(k)))
-        .select(F.col(id),
-          F.posexplode(
-            F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), bi =>
-              F.xxhash64(F.slice(F.col("__mh"), bi * rowsPerBand + 1, F.lit(rowsPerBand))))
-          ).as(Seq("band", "bucket")))
-      // bounded smallest-K cap (the minhashPairsFromShingles shape)
-      b.groupBy("band", "bucket")
-        .agg(graft.plans.GraftFunctions.smallestKLongs(F.col(id), maxBucket).as("__ids"),
-          F.count(F.lit(1)).as("__bn"))
-        .observe(metric, F.sum(F.greatest(F.col("__bn") - maxBucket, F.lit(0L))).as("capped_rows"))
-        .select(F.explode(F.col("__ids")).as(id), F.col("band"), F.col("bucket"))
-    }
     // own the shingle caches' lifecycle (the dropNearDups pattern): the
     // dropped-id list is eagerly materialized (localCheckpoint — it is
     // id-sized, at most the batch's near-dup fraction), after which the
     // cached shingle projections are dead weight and are unpersisted here
-    val shB = shingled(exactSurvivors, "__bid")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val shC = shingled(corpus, "__cid")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val shB = shingles(exactSurvivors, textCol, idCol, w)
+    val shC = shingles(corpus, textCol, idCol, w)
     try {
-      val candidates = banded(shB, "__bid", "inc_dedup_caps_batch")
-        .join(banded(shC, "__cid", "inc_dedup_caps_corpus"), Seq("band", "bucket"))
-        .select("__bid", "__cid").distinct()
-      val dropped = candidates
-        .join(shB, "__bid").join(shC, "__cid")
-        .filter(jaccardHashesUdf(F.col("__sh___bid"), F.col("__sh___cid")) >= threshold)
-        .select(F.col("__bid").as(idCol)).distinct()
+      val candidates = bucketPairs(minhashBands(shB, idCol, k, bands),
+          Seq("band", "bucket"), idCol, maxBucket, "inc_dedup_caps_batch",
+          against = Some(minhashBands(shC, idCol, k, bands) -> "inc_dedup_caps_corpus"))
+        .distinct()
+      val dropped = jaccardVerified(candidates, shB, shC, idCol, threshold)
+        .select(F.col("id_a").as(idCol)).distinct()
         .localCheckpoint()
       exactSurvivors.join(dropped, Seq(idCol), "left_anti")
     } finally {

@@ -417,32 +417,36 @@ object Multimodal {
     MediaBlob(id, "audio", bos.toByteArray)
   }
 
-  /** Audio near-duplicate pairs — `imageDupPairs` for the audio column:
-    * one mapPartitions computes fingerprints, then the shared banding +
-    * Hamming engine. Only (id, hash) rows shuffle. */
+  /** Audio near-duplicate pairs — `imageDupPairs` for the audio column
+    * (`ahash`, metric `ahash_caps`). */
   def audioDupPairs(spark: SparkSession, blobs: Dataset[MediaBlob],
                     maxHamming: Int = 8, maxBucket: Int = 1000)
-      : org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    val hashed = blobs.mapPartitions(_.map(b => (b.media_id, audioHash(b.payload))))
-      .toDF("media_id", "ahash")
-    graft.dedup.Dedup.hammingDupPairsOf(hashed, "ahash", "media_id",
-      maxHamming, maxBucket, capMetric = "ahash_caps")
-  }
+      : org.apache.spark.sql.DataFrame =
+    hashDupPairs(spark, blobs, audioHash, "ahash", maxHamming, maxBucket)
 
-  /** Image near-duplicate pairs: dHash per blob (one mapPartitions over
-    * the binary column — the only stage that touches image bytes), then
-    * the shared 16-bit-band + capped-bucket + Hamming-verify engine
-    * (`Dedup.hammingDupPairsOf`). Only (id, hash) rows ever shuffle;
-    * at 100 TB the image bytes stay in their scan stage. */
+  /** Image near-duplicate pairs over the dHash (`dhash`, metric
+    * `dhash_caps`). */
   def imageDupPairs(spark: SparkSession, blobs: Dataset[MediaBlob],
                     maxHamming: Int = 8, maxBucket: Int = 1000)
+      : org.apache.spark.sql.DataFrame =
+    hashDupPairs(spark, blobs, dHash, "dhash", maxHamming, maxBucket)
+
+  /** Near-duplicate media pairs under a 64-bit perceptual `hash`: one
+    * mapPartitions over the binary column — the only stage that touches
+    * media bytes — computes (media_id, `hashCol`), then the shared
+    * 16-bit-band + capped-bucket + Hamming-verify engine
+    * (`Dedup.hammingDupPairsOf`) runs with its cap published as
+    * `<hashCol>_caps`. Only (id, hash) rows ever shuffle; at 100 TB the
+    * media bytes stay in their scan stage. */
+  private def hashDupPairs(spark: SparkSession, blobs: Dataset[MediaBlob],
+                           hash: Array[Byte] => Long, hashCol: String,
+                           maxHamming: Int, maxBucket: Int)
       : org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    val hashed = blobs.mapPartitions(_.map(b => (b.media_id, dHash(b.payload))))
-      .toDF("media_id", "dhash")
-    graft.dedup.Dedup.hammingDupPairsOf(hashed, "dhash", "media_id",
-      maxHamming, maxBucket, capMetric = "dhash_caps")
+    val hashed = blobs.mapPartitions(_.map(b => (b.media_id, hash(b.payload))))
+      .toDF("media_id", hashCol)
+    graft.dedup.Dedup.hammingDupPairsOf(hashed, hashCol, "media_id",
+      maxHamming, maxBucket, capMetric = s"${hashCol}_caps")
   }
 
   /** Batched REAL decode — same mapPartitions shape as `decodeAll` so a
@@ -642,16 +646,11 @@ object Multimodal {
   }
 
   /** Video near-duplicate pairs — the fourth modality through the shared
-    * banding + Hamming engine. Only (id, hash) rows shuffle. */
+    * banding + Hamming engine (`vhash`, metric `vhash_caps`). */
   def videoDupPairs(spark: SparkSession, blobs: Dataset[MediaBlob],
                     maxHamming: Int = 8, maxBucket: Int = 1000)
-      : org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    val hashed = blobs.mapPartitions(_.map(b => (b.media_id, videoHash(b.payload))))
-      .toDF("media_id", "vhash")
-    graft.dedup.Dedup.hammingDupPairsOf(hashed, "vhash", "media_id",
-      maxHamming, maxBucket, capMetric = "vhash_caps")
-  }
+      : org.apache.spark.sql.DataFrame =
+    hashDupPairs(spark, blobs, videoHash, "vhash", maxHamming, maxBucket)
 
   def frameSampleAll(spark: SparkSession, blobs: Dataset[MediaBlob],
                      everyN: Int): Dataset[VideoFrame] = {

@@ -1,7 +1,6 @@
 package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
-import org.apache.spark.sql.expressions.Window
 
 /** Similarity search over an embedding column (Array[Float]).
   *
@@ -257,8 +256,8 @@ object Ann {
     * (floats promoted, exactly like cosineTo) so threshold-boundary pairs
     * agree with the brute-force oracle; zero-norm rows get cosine -1.0
     * (never NaN). Hot buckets are capped at `maxBucket` rows per
-    * (signature, bucket) with an observe metric — same quadratic defense
-    * as Dedup.minhashDupPairs. */
+    * (signature, bucket) with an observe metric — the quadratic defense
+    * every banded operator shares (`Dedup.bucketPairs`). */
   def cosineDupPairs(df: DataFrame, embCol: String, idCol: String,
                      threshold: Double, nBits: Int = 10, seed: Long = 42L,
                      dim: Int = 64, maxBucket: Int = 1000,
@@ -269,27 +268,23 @@ object Ann {
     val sigsUdf = F.udf((v: Array[Float]) => planesAll.map(p => signature(v, p)))
     val banded = base.select(F.col(idCol),
       F.posexplode(sigsUdf(F.col(embCol))).as(Seq("sig_idx", "lsh_bucket")))
-    // bounded smallest-K cap (the Dedup.minhashPairsFromShingles shape):
-    // map-side-combinable k-heap buffers instead of a window sort of
-    // every banded row; survivor set identical (k smallest ids/bucket)
-    val capped = banded.groupBy("sig_idx", "lsh_bucket")
-      .agg(graft.plans.GraftFunctions.smallestKLongs(F.col(idCol), maxBucket).as("__ids"),
-        F.count(F.lit(1)).as("__bn"))
-      .observe("cosine_dup_caps",
-        F.sum(F.greatest(F.col("__bn") - maxBucket, F.lit(0L))).as("capped_rows"))
-      .select(F.col("sig_idx"), F.col("lsh_bucket"), F.explode(F.col("__ids")).as(idCol))
-    val ca = capped.select(F.col("sig_idx"), F.col("lsh_bucket"), F.col(idCol).as("id_a"))
-    val cb = capped.select(F.col("sig_idx"), F.col("lsh_bucket"), F.col(idCol).as("id_b"))
     // dedupe candidates on ids across signatures/buckets BEFORE the verify:
     // a true near-pair collides in many signatures and would otherwise be
     // cosine-verified once per collision
-    val candidates = ca.join(cb, Seq("sig_idx", "lsh_bucket"))
-      .filter(F.col("id_a") < F.col("id_b"))
-      .select("id_a", "id_b").distinct()
-    // norms are per-ROW quantities: compute them once before the re-attach
-    // instead of twice per candidate pair; norm and dot are compiled
-    // kernels (VecKernels — bit-identical to the interpreted HOF chains
-    // they replaced, which dominated the verify stage's task time)
+    val candidates = graft.dedup.Dedup.bucketPairs(banded, Seq("sig_idx", "lsh_bucket"),
+      idCol, maxBucket, "cosine_dup_caps").distinct()
+    exactCosine(candidates, base, embCol, idCol).filter(F.col("cosine") >= threshold)
+  }
+
+  /** (id_a, id_b, cosine) of candidate id pairs, vectors re-attached from
+    * `base` (id, embedding) by two id-joins. Norms are per-ROW quantities:
+    * they are computed once before the re-attach instead of twice per
+    * candidate pair; norm and dot are compiled kernels (VecKernels —
+    * bit-identical to the interpreted HOF chains they replaced, which
+    * dominated the verify stage's task time). All math in double; a
+    * zero-norm side gives -1.0, never NaN. */
+  private def exactCosine(candidates: DataFrame, base: DataFrame,
+                          embCol: String, idCol: String): DataFrame = {
     val withNorm = base.withColumn("__nrm",
       graft.plans.GraftFunctions.vecNorm(F.col(embCol)))
     val ta = withNorm.select(F.col(idCol).as("id_a"),
@@ -302,7 +297,6 @@ object Ann {
       .select(F.col("id_a"), F.col("id_b"),
         F.when(F.col("nrm_a") === 0.0 || F.col("nrm_b") === 0.0, F.lit(-1.0))
           .otherwise(dot / (F.col("nrm_a") * F.col("nrm_b"))).as("cosine"))
-      .filter(F.col("cosine") >= threshold)
   }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): SEMANTIC dedup over
@@ -335,41 +329,19 @@ object Ann {
                index: IvfIndex, threshold: Double,
                maxCluster: Int = 100000): DataFrame = {
     val base = df.select(F.col(idCol), F.col(embCol))
-    // the cluster-keyed exchange (cap window + self-join) carries ONLY
-    // (ivf_cluster, id) rows — never the embedding vectors. The former
-    // shape shipped both vectors through the pair join (each row's
-    // vector duplicated once per candidate pair, Σ|c|² × 2 × vector
-    // bytes through the exchange); vectors+norms are now re-attached to
-    // the (small) candidate set by two id-joins — the cosineDupPairs
-    // shape. AnnSpec asserts no cluster-keyed exchange ships a vector.
+    // the cluster-keyed exchange (cap + self-join, `Dedup.bucketPairs`)
+    // carries ONLY (ivf_cluster, id) rows — never the embedding vectors,
+    // which would otherwise be duplicated once per candidate pair
+    // (Σ|c|² × 2 × vector bytes); vectors+norms are re-attached to the
+    // (small) candidate set by two id-joins — the cosineDupPairs shape.
+    // AnnSpec asserts no cluster-keyed exchange ships a vector.
     val assigned = ivfAssign(base, embCol, index)
       .select(F.col("ivf_cluster"), F.col(idCol))
-    // bounded smallest-K cap (the minhashPairsFromShingles shape)
-    val capped = assigned.groupBy("ivf_cluster")
-      .agg(graft.plans.GraftFunctions.smallestKLongs(F.col(idCol), maxCluster).as("__ids"),
-        F.count(F.lit(1)).as("__cn"))
-      .observe("semdedup_caps",
-        F.sum(F.greatest(F.col("__cn") - maxCluster, F.lit(0L))).as("capped_rows"))
-      .select(F.col("ivf_cluster"), F.explode(F.col("__ids")).as(idCol))
-    val a = capped.select(F.col("ivf_cluster"), F.col(idCol).as("id_a"))
-    val b = capped.select(F.col("ivf_cluster"), F.col(idCol).as("id_b"))
-    val candidates = a.join(b, Seq("ivf_cluster"))
-      .filter(F.col("id_a") < F.col("id_b"))
-      .select("id_a", "id_b")
-    // verify with the compiled dot/norm kernels (bit-identical to the
-    // interpreted HOF chains — the cosineDupPairs contract)
-    val withNorm = base.withColumn("__nrm",
-      graft.plans.GraftFunctions.vecNorm(F.col(embCol)))
-    val ta = withNorm.select(F.col(idCol).as("id_a"),
-      F.col(embCol).as("emb_a"), F.col("__nrm").as("nrm_a"))
-    val tb = withNorm.select(F.col(idCol).as("id_b"),
-      F.col(embCol).as("emb_b"), F.col("__nrm").as("nrm_b"))
-    val dot = graft.plans.GraftFunctions.vecDot(F.col("emb_a"), F.col("emb_b"))
-    val cosine = F.when(F.col("nrm_a") === 0.0 || F.col("nrm_b") === 0.0, F.lit(-1.0))
-      .otherwise(dot / (F.col("nrm_a") * F.col("nrm_b")))
-    val dropped = candidates
-      .join(ta, "id_a").join(tb, "id_b")
-      .filter(cosine >= threshold)
+    // one cluster per row: a pair shares at most one bucket, so no distinct
+    val candidates = graft.dedup.Dedup.bucketPairs(assigned, Seq("ivf_cluster"),
+      idCol, maxCluster, "semdedup_caps")
+    val dropped = exactCosine(candidates, base, embCol, idCol)
+      .filter(F.col("cosine") >= threshold)
       .select(F.col("id_b").as(idCol)).distinct()
     df.join(dropped, Seq(idCol), "left_anti")
   }

@@ -39,6 +39,21 @@ class JobBudgetSpec extends AnyFunSuite {
     assertWarmBudgets(budgets)
   }
 
+  // the banded near-dup operators (Dedup.bucketPairs); q42 is pinned above.
+  // q95 runs 44 jobs on most warm passes and 45 on some (one more
+  // three-stage job), so its pin is the higher count
+  test("a warm pass over the near-dup queries stays within each query's job budget") {
+    assertWarmBudgets(Seq(
+      "q19_minhash_dups" -> 13L,
+      "q20_simhash_dups" -> 6L,
+      "q49_dedup_components" -> 31L,
+      "q51_drop_near_dups" -> 36L,
+      "q73_semdedup" -> 10L,
+      "q74_incremental_dedup" -> 21L,
+      "q88_image_dup_pairs" -> 6L,
+      "q95_drop_near_dups_best" -> 45L))
+  }
+
   // both re-read their cached build through Tables.read: no schema
   // inference job once the build's schema is known
   test("a warm pass over q61 and q76 stays within each query's job budget") {

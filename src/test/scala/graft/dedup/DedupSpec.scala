@@ -399,22 +399,15 @@ class DedupSpec extends AnyFunSuite {
     assert(viaJoin == (5 until 40).map(_.toLong).toSet)
   }
 
-  test("cacheShingles=true tokenizes each text exactly once (single text scan)") {
+  test("minhashDupPairs tokenizes each text exactly once (single text scan)") {
     import spark.implicits._
-    val sc = spark.sparkContext
-    def runWith(cache: Boolean): Long = {
-      val calls = sc.longAccumulator(s"textReads_$cache")
-      val reader = F.udf { (t: String) => calls.add(1); t }
-      val df = base.toDF("id", "raw").withColumn("text", reader(F.col("raw")))
-      Dedup.minhashDupPairs(df, "text", "id", w = 3, k = 32, bands = 16,
-        threshold = 0.5, cacheShingles = cache).count()
-      calls.value
-    }
-    val withCache = runWith(cache = true)
-    val without = runWith(cache = false)
-    assert(withCache == base.size.toLong,
-      s"cached run must read each text once, read $withCache for ${base.size} rows")
-    assert(without > withCache, s"uncached run re-reads text ($without reads)")
+    val calls = spark.sparkContext.longAccumulator("textReads")
+    val reader = F.udf { (t: String) => calls.add(1); t }
+    val df = base.toDF("id", "raw").withColumn("text", reader(F.col("raw")))
+    Dedup.minhashDupPairs(df, "text", "id", w = 3, k = 32, bands = 16,
+      threshold = 0.5).count()
+    assert(calls.value == base.size.toLong,
+      s"each text must be read once, read ${calls.value} for ${base.size} rows")
   }
 
   test("decontaminateBloom: identical to both exact tiers even at fpp=0.5 (prefilter never decides)") {
