@@ -505,9 +505,9 @@ object SparkEntry {
     }),
 
     // MinHash LSH near-dup pairs on planted dups (no SQL oracle).
-    // minhashDupPairs persists the (id, shingle-hashes) projection, so the
-    // text is read and tokenized exactly once (DedupSpec proves the single
-    // scan).
+    // minhashDupPairs runs its pair job when called, caching the (id,
+    // shingle-hashes) projection for that job only: the text is tokenized
+    // exactly once (DedupSpec) and no cache entry outlives the query.
     "q19_minhash_dups" -> ((s, dir) =>
       graft.dedup.Dedup.minhashDupPairs(docsWithPlantedDups(s, dir), "text", "doc_id",
           w = 3, k = 32, bands = 16, threshold = 0.5)

@@ -1,8 +1,9 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, Observation, functions => F}
 import org.apache.spark.sql.expressions.Window
 
+import graft.Materialize
 import graft.plans.GraftFunctions.wordGrams
 
 /** Deduplication operators for large-scale training-data pipelines.
@@ -248,15 +249,20 @@ object Dedup {
     * text is read and tokenized EXACTLY ONCE (an unpersisted projection is
     * evaluated once per subtree: banding + the two re-attach sides); the
     * cached arrays are ~1-2% of text size, a fair trade even at 10^12 rows
-    * (spills to local disk, never OOMs). The cache lives until the session
-    * evicts it (LRU) or the caller clears it; eviction only costs
-    * recompute, never correctness. `dropNearDups` owns the lifecycle
-    * itself and unpersists once the pair list is materialized. */
+    * (spills to local disk, never OOMs). Runs its pair job when called,
+    * as `decontaminate` and `components` do: the pair list is snapshotted
+    * and the cache released before this returns. */
   def minhashDupPairs(df: DataFrame, textCol: String, idCol: String,
                       w: Int = 3, k: Int = 32, bands: Int = 8,
-                      threshold: Double = 0.7, maxBucket: Int = 1000): DataFrame =
-    minhashPairsFromShingles(shingles(df, textCol, idCol, w), idCol, k, bands,
-      threshold, maxBucket)
+                      threshold: Double = 0.7, maxBucket: Int = 1000): DataFrame = {
+    val sh = shingles(df, textCol, idCol, w)
+    // dedupe candidates on ids BEFORE the exact-Jaccard kernel: a true
+    // near-dup pair collides in many bands and would be verified per band
+    Materialize.snapshotReleasing(sh)(jaccardVerified(
+      bucketPairs(minhashBands(sh, idCol, k, bands), Seq("band", "bucket"), idCol,
+        maxBucket, "minhash_caps").distinct(),
+      sh, sh, idCol, threshold))
+  }
 
   /** The persisted (id, __sh shingle-hash array) projection the minhash
     * operators band and verify from. */
@@ -288,18 +294,6 @@ object Dedup {
       .select(F.col("id_a"), F.col("id_b"),
         jaccardHashesUdf(F.col("sh_a"), F.col("sh_b")).as("jaccard"))
       .filter(F.col("jaccard") >= threshold)
-  }
-
-  /** Core of minhashDupPairs over a `shingles` frame — split out so
-    * `dropNearDups` can own the shingle cache's lifecycle. */
-  private def minhashPairsFromShingles(withSh: DataFrame, idCol: String,
-                                       k: Int, bands: Int, threshold: Double,
-                                       maxBucket: Int): DataFrame = {
-    // dedupe candidates on ids BEFORE the exact-Jaccard kernel: a true
-    // near-dup pair collides in many bands and would be verified per band
-    val candidates = bucketPairs(minhashBands(withSh, idCol, k, bands),
-      Seq("band", "bucket"), idCol, maxBucket, "minhash_caps").distinct()
-    jaccardVerified(candidates, withSh, withSh, idCol, threshold)
   }
 
   /** The hot-bucket cap and candidate pairing of every banded near-dup
@@ -358,13 +352,15 @@ object Dedup {
     * Algorithm: hash-min label propagation on DataFrames. Every node
     * starts labeled with its own id; each round takes the min of its own
     * and its neighbors' labels (one join + one aggregation, both
-    * map-side-combinable); converged when no label changed. Rounds needed
-    * = the largest component's diameter — for near-dup clusters that is
-    * small by construction (members are all pairwise-similar, so clusters
-    * are near-cliques; real-corpus diameters are single digits). Each
-    * round shuffles only (node, label) pairs — 16 bytes/row — never text.
-    * The per-round action (convergence count) is the deliberate trade for
-    * not over-iterating; `maxIter` bounds a truly pathological graph.
+    * map-side-combinable; round 1, where every label is still its node's
+    * id, is the aggregation alone); converged when no label changed.
+    * Rounds needed = the largest component's diameter — for near-dup
+    * clusters that is small by construction (members are all
+    * pairwise-similar, so clusters are near-cliques; real-corpus diameters
+    * are single digits). Each round shuffles only (node, label) pairs —
+    * 16 bytes/row — never text. The per-round convergence count rides the
+    * round's final snapshot as an `observe` metric, so it costs no job of
+    * its own; `maxIter` bounds a truly pathological graph.
     *
     * Large diameters: plain propagation needs diameter-many rounds, so a
     * long CHAIN of pairwise-similar documents (each similar to the next,
@@ -376,74 +372,74 @@ object Dedup {
     * O(log diameter) rounds, so maxIter=25 covers diameters beyond 2^20.
     * Near-clique clusters (the common near-dup case) still converge in
     * <= 2 rounds and never pay the extra join.
-    * Each round's result is checkpointed: iterative self-joins otherwise
-    * DOUBLE the logical plan per round (2^rounds analyzer blowup — the
-    * classic iterative-DataFrame OOM), and at scale you'd recompute the
-    * whole history every round. `reliable = false` (default) uses
-    * `localCheckpoint` — executor-local blocks, fast, but NOT
-    * fault-tolerant: losing an executor at iteration 20 of a 100 TB
-    * dedup kills the whole job. Pass `reliable = true` on a real cluster
-    * to write each round through `checkpoint()` to the configured
-    * `sparkContext.setCheckpointDir` (HDFS/S3) — an executor loss then
-    * recovers from the checkpoint instead of restarting the job; the
-    * per-round write is (node,label)-sized, not corpus-sized.
+    * Each round's result is snapshotted (`Materialize.snapshot`, which
+    * follows the session's checkpoint dir): iterative self-joins
+    * otherwise DOUBLE the logical plan per round.
     * Returns (node, comp) with comp = min id in the component; nodes
     * appearing in no pair are singletons and are not emitted (their
     * component is trivially themselves). */
   def components(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-                 maxIter: Int = 25, reliable: Boolean = false): DataFrame = {
-    if (reliable)
-      require(pairs.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "components(reliable = true) needs sparkContext.setCheckpointDir " +
-          "(a fault-tolerant FS path); the localCheckpoint default covers " +
-          "exactly the no-checkpoint-dir case")
-    def snap(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-    // materialize the pair list ONCE before the two-direction union —
-    // otherwise each union branch re-executes the upstream plan (for
-    // minhash pairs that is the candidate join + exact-verify kernel,
-    // the dominant cost of the whole dedup)
-    val p = snap(pairs.select(F.col(idA).as("src"), F.col(idB).as("dst")))
-    val edges = snap(p.union(p.select(F.col("dst").as("src"), F.col("src").as("dst"))))
-    var labels = snap(edges.select(F.col("src").as("node")).distinct()
-      .withColumn("comp", F.col("node")))
+                 maxIter: Int = 25): DataFrame = {
+    import Materialize.snapshot
+    // both directions of every pair in ONE pass over `pairs`: a union of
+    // two projections would run the upstream plan once per branch
+    val edges = snapshot(pairs.select(F.explode(F.array(
+        F.struct(F.col(idA).as("src"), F.col(idB).as("dst")),
+        F.struct(F.col(idB).as("src"), F.col(idA).as("dst")))).as("__e"))
+      .select("__e.src", "__e.dst"))
+    var labels = Option.empty[DataFrame]
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIter) {
-      val nbrMin = edges
-        .join(labels.select(F.col("node").as("dst"), F.col("comp").as("dcomp")), "dst")
-        .groupBy("src").agg(F.min("dcomp").as("ncomp"))
-      // carry the previous label through the checkpoint so convergence is
-      // a scan of materialized data — not an extra node-keyed join (which
-      // costs two more shuffles per round)
-      val propagated = labels
-        .join(nbrMin.withColumnRenamed("src", "node"), Seq("node"), "left")
-        .select(F.col("node"), F.col("comp").as("__prev"),
-          F.least(F.col("comp"), F.coalesce(F.col("ncomp"), F.col("comp"))).as("comp"))
+      // carry the previous label through the snapshot so convergence is
+      // counted on the snapshot's own rows — not an extra node-keyed join
+      // (which costs two more shuffles per round)
+      val propagated = labels match {
+        // round 1: every label is still its node's own id (edges are
+        // symmetric, so every node is a `src`), so the neighbours' min
+        // needs no label join
+        case None =>
+          edges.groupBy("src").agg(F.min("dst").as("ncomp"))
+            .select(F.col("src").as("node"), F.col("src").as("__prev"),
+              F.least(F.col("src"), F.col("ncomp")).as("comp"))
+        case Some(l) =>
+          val nbrMin = edges
+            .join(l.select(F.col("node").as("dst"), F.col("comp").as("dcomp")), "dst")
+            .groupBy("src").agg(F.min("dcomp").as("ncomp"))
+          l.join(nbrMin.withColumnRenamed("src", "node"), Seq("node"), "left")
+            .select(F.col("node"), F.col("comp").as("__prev"),
+              F.least(F.col("comp"), F.coalesce(F.col("ncomp"), F.col("comp"))).as("comp"))
+      }
+      // labels only ever decrease (least/label-of-label), so "changed" is a
+      // strict decrease; a fresh Observation per round (each fills once)
+      val obs = Observation()
+      def counted(df: DataFrame): DataFrame = snapshot(df.observe(obs,
+        F.sum(F.when(F.col("comp") < F.col("__prev"), 1L).otherwise(0L)).as("n")))
       val next =
-        if (iter < 2) snap(propagated)
+        if (iter < 2) counted(propagated)
         else {
           // pointer jumping (rounds 3+ only — a cluster still unconverged
           // here has diameter > 2): label <- label(label). Every comp value
           // is itself a node (labels are mins over node ids), so the
-          // self-join always hits; checkpoint first so the self-join reads
+          // self-join always hits; snapshot first so the self-join reads
           // materialized rows instead of re-running the propagation join.
-          val pj = snap(propagated)
-          snap(pj.join(pj.select(F.col("node").as("comp"), F.col("comp").as("__j")),
+          val pj = snapshot(propagated)
+          counted(pj.join(pj.select(F.col("node").as("comp"), F.col("comp").as("__j")),
               Seq("comp"), "left")
             .select(F.col("node"), F.col("__prev"),
               F.coalesce(F.col("__j"), F.col("comp")).as("comp")))
         }
-      // labels only ever decrease (least/label-of-label), so "changed" is a
-      // strict decrease
-      changed = next.filter(F.col("comp") < F.col("__prev")).count()
-      labels = next.select(F.col("node"), F.col("comp"))
+      changed = obs.get.get("n") match {
+        case Some(v: java.lang.Number) => v.longValue()
+        case _ => 0L // sum over zero rows observes null
+      }
+      labels = Some(next.select(F.col("node"), F.col("comp")))
       iter += 1
     }
     require(changed == 0L,
       s"components did not converge in $maxIter rounds — raise maxIter " +
         "(component diameter exceeds the bound)")
-    labels
+    labels.get
   }
 
   /** Drop the non-canonical members of every duplicate cluster implied by
@@ -499,8 +495,8 @@ object Dedup {
                        score: Column,
                        w: Int = 3, k: Int = 32, bands: Int = 8,
                        threshold: Double = 0.7, maxBucket: Int = 1000): DataFrame =
-    dropNearDupsWith(df, textCol, idCol, w, k, bands, threshold, maxBucket)(
-      dropByPairsKeepBest(df, _, idCol, score))
+    dropByPairsKeepBest(df,
+      minhashDupPairs(df, textCol, idCol, w, k, bands, threshold, maxBucket), idCol, score)
 
   /** The end-to-end near-dup FILTER a training-data pipeline actually
     * runs: detect pairs (minhash LSH over word shingles), cluster, keep
@@ -510,21 +506,8 @@ object Dedup {
   def dropNearDups(df: DataFrame, textCol: String, idCol: String,
                    w: Int = 3, k: Int = 32, bands: Int = 8,
                    threshold: Double = 0.7, maxBucket: Int = 1000): DataFrame =
-    dropNearDupsWith(df, textCol, idCol, w, k, bands, threshold, maxBucket)(
-      dropByPairs(df, _, idCol))
-
-  /** minhash pairs handed to `drop`, owning the shingle cache's
-    * lifecycle: the drop tails' `components` eagerly materializes the
-    * pair list (localCheckpoint), after which the cached shingle
-    * projection is dead weight — unpersist it here rather than pinning
-    * ~1-2% of corpus text in the session cache until LRU eviction. */
-  private def dropNearDupsWith(df: DataFrame, textCol: String, idCol: String,
-                               w: Int, k: Int, bands: Int, threshold: Double,
-                               maxBucket: Int)(drop: DataFrame => DataFrame): DataFrame = {
-    val withSh = shingles(df, textCol, idCol, w)
-    try drop(minhashPairsFromShingles(withSh, idCol, k, bands, threshold, maxBucket))
-    finally withSh.unpersist(false)
-  }
+    dropByPairs(df, minhashDupPairs(df, textCol, idCol, w, k, bands, threshold, maxBucket),
+      idCol)
 
   /** Benchmark DECONTAMINATION: drop every corpus document that shares at
     * least one word w-shingle with any benchmark document — the standard
@@ -766,15 +749,14 @@ object Dedup {
     * scale (0 = count the benchmark side first — one cheap extra job, the
     * bench side is the small one by assumption). The benchmark shingle
     * frame is persisted (it is read twice: bloom build + confirm join)
-    * and the operator OWNS the lifecycle (the dropNearDups pattern): the
-    * contaminated-id list — at most the contaminated fraction, 8 bytes
-    * per id — is eagerly materialized via localCheckpoint, after which
-    * the shingle cache and the bloom broadcast are dead weight and are
-    * released in the finally, instead of accumulating executor cache and
-    * broadcast memory across calls in a long-lived session. The
-    * `localCheckpoint`ed id list lives in executor block storage only and
-    * has no lineage back to the released inputs: it does not survive the
-    * loss of an executor holding it, and re-running the operator is the
+    * and the operator OWNS the lifecycle: the contaminated-id list — at
+    * most the contaminated fraction, 8 bytes per id — is snapshotted by
+    * `Materialize.snapshotReleasing`, which then unpersists the shingle
+    * cache, and the bloom broadcast is destroyed after it, instead of
+    * accumulating executor cache and broadcast memory across calls in a
+    * long-lived session. The snapshot has no lineage back to the released
+    * inputs: it survives executor loss only when the session has a
+    * checkpoint dir, and otherwise re-running the operator is the
     * recovery path. */
   def decontaminateBloom(corpus: DataFrame, textCol: String, idCol: String,
                          benchmark: DataFrame, benchTextCol: String,
@@ -789,24 +771,19 @@ object Dedup {
     val expected = if (expectedShingles > 0L) expectedShingles else bg.count()
     val bloom = bg.stat.bloomFilter("g", math.max(expected, 1L), fpp)
     val bc = corpus.sparkSession.sparkContext.broadcast(bloom)
-    try {
-      val hitsUdf = F.udf { (text: String) =>
-        // sorted-distinct: each possibly-contaminating shingle joins once
-        sortedDistinct(shingleHashes(text, w).filter(h => bc.value.mightContainLong(h)))
-      }
-      val cand = corpus
+    val hitsUdf = F.udf { (text: String) =>
+      // sorted-distinct: each possibly-contaminating shingle joins once
+      sortedDistinct(shingleHashes(text, w).filter(h => bc.value.mightContainLong(h)))
+    }
+    val contaminated =
+      try Materialize.snapshotReleasing(bg)(corpus
         .select(F.col(idCol), hitsUdf(F.col(textCol)).as("__hits"))
         .filter(F.size(F.col("__hits")) > 0)
-      val contaminated = cand
         .select(F.col(idCol), F.explode(F.col("__hits")).as("g"))
         .join(bg, Seq("g"), "left_semi")
-        .select(idCol).distinct()
-        .localCheckpoint()
-      corpus.join(contaminated, Seq(idCol), "left_anti")
-    } finally {
-      bg.unpersist(blocking = false)
-      bc.destroy()
-    }
+        .select(idCol).distinct())
+      finally bc.destroy()
+    corpus.join(contaminated, Seq(idCol), "left_anti")
   }
 
   /** CORPUS-WIDE exact line dedup, KEEP-FIRST (the line-granularity form
@@ -1067,24 +1044,18 @@ object Dedup {
     val corpusFp = corpus.select(fp.as("__fp")).distinct()
     val exactSurvivors = batch.withColumn("__fp", fp)
       .join(corpusFp, Seq("__fp"), "left_anti").drop("__fp")
-    // own the shingle caches' lifecycle (the dropNearDups pattern): the
-    // dropped-id list is eagerly materialized (localCheckpoint — it is
-    // id-sized, at most the batch's near-dup fraction), after which the
-    // cached shingle projections are dead weight and are unpersisted here
+    // the dropped-id list (id-sized, at most the batch's near-dup
+    // fraction) is snapshotted, then both shingle caches are released
     val shB = shingles(exactSurvivors, textCol, idCol, w)
     val shC = shingles(corpus, textCol, idCol, w)
-    try {
+    val dropped = Materialize.snapshotReleasing(shB, shC) {
       val candidates = bucketPairs(minhashBands(shB, idCol, k, bands),
           Seq("band", "bucket"), idCol, maxBucket, "inc_dedup_caps_batch",
           against = Some(minhashBands(shC, idCol, k, bands) -> "inc_dedup_caps_corpus"))
         .distinct()
-      val dropped = jaccardVerified(candidates, shB, shC, idCol, threshold)
+      jaccardVerified(candidates, shB, shC, idCol, threshold)
         .select(F.col("id_a").as(idCol)).distinct()
-        .localCheckpoint()
-      exactSurvivors.join(dropped, Seq(idCol), "left_anti")
-    } finally {
-      shB.unpersist(blocking = false)
-      shC.unpersist(blocking = false)
     }
+    exactSurvivors.join(dropped, Seq(idCol), "left_anti")
   }
 }

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, Observation, functions => F}
 import org.apache.spark.sql.expressions.Window
 
+import graft.Materialize.snapshot
 import graft.dedup.Dedup
 import graft.etl.Packing
 import graft.functions.TextFunctions
@@ -38,11 +39,13 @@ import graft.quality.Rules
   * Scale shape: stages 1–2 shuffle ids/hashes only, stage 3 is a
   * shuffle-free broadcast filter, stage 4 is a narrow filter, stage 5 is
   * one shard-keyed window. With `report=true` the heavy intermediates are
-  * localCheckpoint'ed and every stage count rides those SAME jobs as an
-  * `observe` metric (CollectMetrics accumulators) — the report is FREE:
-  * zero extra jobs, no re-scan of the raw input (CorpusPrepSpec asserts
-  * the job count). `report=false` skips checkpoints and counts entirely
-  * and fuses the prep into one lazy job for the caller's sink.
+  * snapshotted (`Materialize.snapshot`) and every stage count rides those
+  * SAME jobs as an `observe` metric (CollectMetrics accumulators) — the
+  * report is FREE: zero extra jobs, no re-scan of the raw input
+  * (CorpusPrepSpec asserts the job count). `report=false` adds no
+  * snapshot and no count: past the jobs the near-dup stage runs when
+  * called (its pair list and component rounds), the prep is one lazy plan
+  * for the caller's sink.
   */
 object CorpusPrep {
 
@@ -141,12 +144,12 @@ object CorpusPrep {
     // rate survive ("drop the weirdest quartile by perplexity per
     // source"). Unlike the narrow stages this needs its own aggregate
     // jobs (vocab counts + cutoffs), so the input frame is ALWAYS
-    // checkpointed first — in report mode that also protects the
+    // snapshotted first — in report mode that also protects the
     // one-shot quality Observation from being consumed with empty
     // metrics by the count job (the boilerplate-stage hazard).
     def lmBanded(df: DataFrame): DataFrame = lmBand match {
       case Some((lo, hi)) =>
-        val ck = df.localCheckpoint(true)
+        val ck = snapshot(df)
         val counts = graft.quality.LmScore.unigramCounts(ck, textCol)
         val scored = ck.join(
           graft.quality.LmScore.scoreQuantizedBits(ck, textCol, idCol, counts),
@@ -201,8 +204,8 @@ object CorpusPrep {
       }
       (pack(lmBanded(junkFree(d3))), None)
     } else {
-      // each Observation below is filled by the eager localCheckpoint of
-      // the frame it is attached to (checkpoint executes the observed plan
+      // each Observation below is filled by the eager snapshot of the
+      // frame it is attached to (the snapshot executes the observed plan
       // under a SQL execution, so CollectMetrics accumulators report) —
       // the input count rides d1's job via the observe on `docs`, which
       // Dedup.exact scans exactly once
@@ -214,23 +217,21 @@ object CorpusPrep {
       // report's input count means rows read; afterExactDedup therefore
       // reflects cleaning + dedup together when lineClean is on.
       // With the boilerplate stage enabled, the cleaned+observed input is
-      // checkpointed FIRST: the stage's eager frequency job would
+      // snapshotted FIRST: the stage's eager frequency job would
       // otherwise consume obsIn's one-shot Observation with empty metrics
       // (its aggregated/limited plan loses the CollectMetrics result),
-      // and the checkpoint also keeps the C4-clean chain from being
+      // and the snapshot also keeps the C4-clean chain from being
       // scanned twice (once by the frequency job, once by d1)
       val pre0 = lineCleaned(docs.observe(obsIn, count1))
       val pre =
         if (boilerplateMinDocFreq.isDefined)
-          boilerplateFree(pre0.localCheckpoint(true))
+          boilerplateFree(snapshot(pre0))
         else pre0
-      val d1 = Dedup.exact(pre, textCol, idCol)
-        .observe(obs1, count1).localCheckpoint(true)
-      val d2 = nearDupFree(d1)
-        .observe(obs2, count1).localCheckpoint(true)
+      val d1 = snapshot(Dedup.exact(pre, textCol, idCol).observe(obs1, count1))
+      val d2 = snapshot(nearDupFree(d1).observe(obs2, count1))
       val d3 = benchmark match {
         case Some(b) =>
-          decontaminated(d2, b).observe(obs3, count1).localCheckpoint(true)
+          snapshot(decontaminated(d2, b).observe(obs3, count1))
         case None => d2
       }
       val d4 = junkFree(d3).observe(obs4, count1)
@@ -239,13 +240,12 @@ object CorpusPrep {
       // sum(head) is then an observable chunk count (observe cannot do
       // count-distinct)
       val wShard = Window.partitionBy(shardCol).orderBy(idCol)
-      val packed = pack(lmBanded(d4))
+      val packed = snapshot(pack(lmBanded(d4))
         .withColumn("__head",
           (F.lag("chunk_id", 1).over(wShard).isNull ||
             F.lag("chunk_id", 1).over(wShard) =!= F.col("chunk_id")).cast("long"))
         .observe(obsChunks, F.sum("__head").as("n"))
-        .drop("__head")
-        .localCheckpoint(true)
+        .drop("__head"))
 
       def n(o: Observation): Long = o.get.get("n") match {
         case Some(v: java.lang.Number) => v.longValue()

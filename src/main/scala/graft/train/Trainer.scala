@@ -65,50 +65,51 @@ object Trainer {
     val feat = withFeatures(spark, df, textCol, tokens)
       .withColumn("is_val", bucket < valPct)
       .cache()
+    try {
+      val labels = feat.select(labelCol).distinct().collect().map(_.getString(0)).sorted
+      val labelIdx = labels.zipWithIndex.toMap
+      val weights = balancedWeights(feat.filter(!F.col("is_val")), labelCol)
+      // LR infers numClasses from the train split; a class present only in
+      // the val split would desync the exported coef matrix — fail fast with
+      // a diagnosable error instead of an IndexOutOfBounds at export
+      require(weights.keySet == labels.toSet,
+        s"classes absent from the train split: ${labels.toSet -- weights.keySet} " +
+          "(decrease valPct or supply more rows per class)")
+      val idxUdf = F.udf((l: String) => labelIdx(l).toDouble)
+      val wUdf = F.udf((l: String) => weights.getOrElse(l, 1.0))
+      val prepared = feat
+        .withColumn("label", idxUdf(F.col(labelCol)))
+        .withColumn("weight", wUdf(F.col(labelCol)))
 
-    val labels = feat.select(labelCol).distinct().collect().map(_.getString(0)).sorted
-    val labelIdx = labels.zipWithIndex.toMap
-    val weights = balancedWeights(feat.filter(!F.col("is_val")), labelCol)
-    // LR infers numClasses from the train split; a class present only in
-    // the val split would desync the exported coef matrix — fail fast with
-    // a diagnosable error instead of an IndexOutOfBounds at export
-    require(weights.keySet == labels.toSet,
-      s"classes absent from the train split: ${labels.toSet -- weights.keySet} " +
-        "(decrease valPct or supply more rows per class)")
-    val idxUdf = F.udf((l: String) => labelIdx(l).toDouble)
-    val wUdf = F.udf((l: String) => weights.getOrElse(l, 1.0))
-    val prepared = feat
-      .withColumn("label", idxUdf(F.col(labelCol)))
-      .withColumn("weight", wUdf(F.col(labelCol)))
+      val trainDf = prepared.filter(!F.col("is_val"))
+      val valDf = prepared.filter(F.col("is_val"))
 
-    val trainDf = prepared.filter(!F.col("is_val"))
-    val valDf = prepared.filter(F.col("is_val"))
+      val lr = new LogisticRegression()
+        .setFamily("multinomial")
+        .setMaxIter(maxIter)
+        .setRegParam(regParam)
+        .setWeightCol("weight")
+        .setFeaturesCol("features")
+        .setLabelCol("label")
+      val fitted = lr.fit(trainDf)
 
-    val lr = new LogisticRegression()
-      .setFamily("multinomial")
-      .setMaxIter(maxIter)
-      .setRegParam(regParam)
-      .setWeightCol("weight")
-      .setFeaturesCol("features")
-      .setLabelCol("label")
-    val fitted = lr.fit(trainDf)
+      // export to the reference's model schema (classes sorted, coef rows in
+      // class order) and reorder by importance like train_model.py:34-51
+      val cm = fitted.coefficientMatrix
+      val coef = Array.tabulate(labels.length, tokens.length)((i, j) => cm(i, j))
+      val model = LangIdModel(tokens.clone(), labels, coef,
+        fitted.interceptVector.toArray).reorderByImportance
 
-    // export to the reference's model schema (classes sorted, coef rows in
-    // class order) and reorder by importance like train_model.py:34-51
-    val cm = fitted.coefficientMatrix
-    val coef = Array.tabulate(labels.length, tokens.length)((i, j) => cm(i, j))
-    val model = LangIdModel(tokens.clone(), labels, coef,
-      fitted.interceptVector.toArray).reorderByImportance
+      // holdout macro-F1 with OUR scorer (the artifact that ships), not the
+      // ml model — catches any export mismatch
+      val scorer = new Scorer(model)
+      val bcScorer = spark.sparkContext.broadcast(scorer)
+      val predUdf = F.udf((text: String) => bcScorer.value.predictLabel(text))
+      val scored = valDf.withColumn("pred", predUdf(F.col(textCol)))
+      val f1 = F1.macroF1(scored, labelCol, "pred")
 
-    // holdout macro-F1 with OUR scorer (the artifact that ships), not the
-    // ml model — catches any export mismatch
-    val scorer = new Scorer(model)
-    val bcScorer = spark.sparkContext.broadcast(scorer)
-    val predUdf = F.udf((text: String) => bcScorer.value.predictLabel(text))
-    val scored = valDf.withColumn("pred", predUdf(F.col(textCol)))
-    val f1 = F1.macroF1(scored, labelCol, "pred")
-
-    TrainResult(model, f1, trainDf.count(), valDf.count())
+      TrainResult(model, f1, trainDf.count(), valDf.count())
+    } finally { feat.unpersist(false); () }
   }
 
   final case class BowResult(

@@ -40,18 +40,35 @@ class JobBudgetSpec extends AnyFunSuite {
   }
 
   // the banded near-dup operators (Dedup.bucketPairs); q42 is pinned above.
-  // q95 runs 44 jobs on most warm passes and 45 on some (one more
-  // three-stage job), so its pin is the higher count
+  // q95 runs 34 jobs on some warm passes and 33 on others (one job
+  // fewer), so its pin is the higher count
   test("a warm pass over the near-dup queries stays within each query's job budget") {
     assertWarmBudgets(Seq(
-      "q19_minhash_dups" -> 13L,
+      "q19_minhash_dups" -> 14L,
       "q20_simhash_dups" -> 6L,
-      "q49_dedup_components" -> 31L,
-      "q51_drop_near_dups" -> 36L,
+      "q49_dedup_components" -> 24L,
+      "q51_drop_near_dups" -> 29L,
       "q73_semdedup" -> 10L,
       "q74_incremental_dedup" -> 21L,
       "q88_image_dup_pairs" -> 6L,
-      "q95_drop_near_dups_best" -> 45L))
+      "q95_drop_near_dups_best" -> 34L))
+  }
+
+  // the bloom decontamination tier: the bench-side count and bloom jobs,
+  // then the contaminated-id snapshot
+  test("a warm pass over q71 stays within its job budget") {
+    assertWarmBudgets(Seq("q71_decontaminate_bloom" -> 14L))
+  }
+
+  // minhashDupPairs releases its shingle cache before it returns, so no
+  // query can leave q19 a cache hit (q51 and q19 cache the same projection)
+  test("q19's warm job count does not depend on the query run before it") {
+    jobsOf("q19_minhash_dups")
+    val afterItself = jobsOf("q19_minhash_dups")
+    jobsOf("q51_drop_near_dups")
+    val afterQ51 = jobsOf("q19_minhash_dups")
+    assert(afterItself == afterQ51,
+      s"q19 ran $afterItself jobs after itself but $afterQ51 after q51")
   }
 
   // both re-read their cached build through Tables.read: no schema

@@ -61,11 +61,27 @@ class DedupSpec extends AnyFunSuite {
       // plain physical tree (AQE wraps it in an adaptive root that hides
       // the exchanges from collect)
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val pairs = Dedup.minhashDupPairs(df, "text", "id", w = 3, k = 32,
-        bands = 16, threshold = 0.5)
-      val exchanges = pairs.queryExecution.executedPlan.collect {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+      // minhashDupPairs snapshots its pair list before returning, so the
+      // plan to inspect is the one its snapshot action executed
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+        org.apache.spark.sql.execution.SparkPlan]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(fn: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit = {
+          plans.add(qe.executedPlan); ()
+        }
+        override def onFailure(fn: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
       }
+      spark.listenerManager.register(listener)
+      try {
+        Dedup.minhashDupPairs(df, "text", "id", w = 3, k = 32, bands = 16, threshold = 0.5)
+        org.apache.spark.ListenerDrain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      import scala.jdk.CollectionConverters._
+      val exchanges = plans.asScala.toSeq.flatMap(_.collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+      })
       val bandedExchanges = exchanges.filter(_.output.exists(_.name == "bucket"))
       assert(bandedExchanges.nonEmpty, "expected band/bucket exchanges in the plan")
       bandedExchanges.foreach { e =>
@@ -167,33 +183,45 @@ class DedupSpec extends AnyFunSuite {
       "every chain node must reach label 0")
   }
 
-  test("components reliable=true: identical labels via fault-tolerant checkpoints") {
+  test("components with a checkpoint dir: same labels, checkpoints written there") {
     import spark.implicits._
     val pairs = (Seq((1L, 2L), (2L, 3L), (10L, 11L)) ++
       (100L until 112L).map(i => (i, i + 1))).toDF("id_a", "id_b")
-    // no checkpoint dir configured -> loud failure, not a silent fallback
     val sc = spark.sparkContext
     assert(sc.getCheckpointDir.isEmpty)
-    intercept[IllegalArgumentException] {
-      Dedup.components(pairs, reliable = true)
-    }
+    val viaLocal = Dedup.components(pairs).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toMap
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     try {
       sc.setCheckpointDir(dir)
-      val viaReliable = Dedup.components(pairs, reliable = true).collect()
+      val viaDir = Dedup.components(pairs).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toMap
-      val viaLocal = Dedup.components(pairs).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(viaReliable == viaLocal, "checkpoint mode must not change labels")
-      // and the rounds actually wrote through the reliable dir
+      assert(viaDir == viaLocal, "checkpointing into the dir must not change labels")
       assert(graft.etl.BuildCache.listDataFiles(spark, dir).nonEmpty,
-        "reliable mode must materialize RDD checkpoints in the configured dir")
+        "with a checkpoint dir set, the rounds must write RDD checkpoints into it")
     } finally {
-      // a SparkContext has no unsetCheckpointDir; point it at a throwaway
-      // so later suites aren't affected, then clean up
-      sc.setCheckpointDir(java.nio.file.Files.createTempDirectory("graft-ckpt2").toString)
+      // later suites (JobBudgetSpec's pins among them) must see no dir
+      org.apache.spark.CheckpointDirReset(sc)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
+    assert(sc.getCheckpointDir.isEmpty)
+  }
+
+  test("components raises its non-convergence require when maxIter is too small") {
+    import spark.implicits._
+    // the 201-node chain needs more than 2 rounds even with pointer
+    // jumping, so the observed per-round change count is still > 0
+    val pairs = (0L until 200L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalArgumentException](Dedup.components(pairs, maxIter = 2))
+    assert(e.getMessage.contains("did not converge in 2 rounds"))
+  }
+
+  test("components on an empty pair list returns an empty frame") {
+    import spark.implicits._
+    val pairs = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    val got = Dedup.components(pairs)
+    assert(got.columns.toSeq == Seq("node", "comp"))
+    assert(got.collect().isEmpty)
   }
 
   test("decontaminate scales to a multi-million-shingle benchmark (primitive broadcast)") {
@@ -408,6 +436,18 @@ class DedupSpec extends AnyFunSuite {
       threshold = 0.5).count()
     assert(calls.value == base.size.toLong,
       s"each text must be read once, read ${calls.value} for ${base.size} rows")
+  }
+
+  test("minhashDupPairs leaves no cache entry behind when it returns") {
+    import spark.implicits._
+    val dups = base.take(5).map { case (id, text) =>
+      (id + 1000, text.replaceFirst("w\\d+", "changed")) }
+    spark.catalog.clearCache()
+    val pairs = Dedup.minhashDupPairs((base ++ dups).toDF("id", "text"), "text", "id",
+      w = 3, k = 32, bands = 16, threshold = 0.5)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the shingle projection must not stay cached after the call")
+    assert(pairs.count() == dups.size.toLong)
   }
 
   test("decontaminateBloom: identical to both exact tiers even at fpp=0.5 (prefilter never decides)") {

@@ -132,28 +132,16 @@ class CorpusPrepSpec extends AnyFunSuite {
     val base = (0 until 30).map(doc)
     val docs = base.toDF("shard", "id", "text")
     val bench = Seq(base(2)._3.split(" ").slice(3, 13).mkString(" ")).toDF("text")
-    def countJobs(f: => Unit): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          counter.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try { f; org.apache.spark.ListenerDrain(spark.sparkContext) }
-      finally spark.sparkContext.removeSparkListener(listener)
-      counter.get()
-    }
     // baseline: identical pipeline with NO report, materialized by one
     // final checkpoint — the same data flows through the same internal
     // jobs (components rounds, pair checkpoints), so any report overhead
     // beyond the three intermediate stage checkpoints is extra jobs
-    val jobsNoReport = countJobs {
+    val jobsNoReport = SparkTestSession.jobsOf {
       val (packed, _) = CorpusPrep.run(docs, "text", "id", "shard",
         benchmark = Some(bench), tokenBudget = 100L, threshold = 0.5, report = false)
       packed.localCheckpoint(true)
     }
-    val jobsReport = countJobs {
+    val jobsReport = SparkTestSession.jobsOf {
       CorpusPrep.run(docs, "text", "id", "shard",
         benchmark = Some(bench), tokenBudget = 100L, threshold = 0.5, report = true)
     }
