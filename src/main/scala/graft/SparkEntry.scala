@@ -91,6 +91,26 @@ object SparkEntry {
     docs.unionByName(dups)
   }
 
+  /** The decontamination "benchmark" of q55/q57/q71: a 16-word window of
+    * every 37th document with >= 21 words, so exactly those source
+    * documents share an 8-gram with it. */
+  private def decontaminationBench(docs: DataFrame): DataFrame = {
+    def words(c: Column) =
+      filter(split(lower(c), "\\s+"), w => w =!= lit(""))
+    docs
+      .filter(col("doc_id") % 37 === 0 && size(words(col("text"))) >= 21)
+      .select(concat_ws(" ", slice(words(col("text")), 6, 16)).as("btext"))
+  }
+
+  /** documents with a footer line planted on doc_id % 4 == 0 (125 docs at
+    * sf0.01), so q66/q67 have a genuinely frequent line to remove. */
+  private def docsWithPlantedFooter(s: SparkSession, dir: String): DataFrame = {
+    val planted = when(col("doc_id") % 4 === 0,
+      concat(col("text"), lit("\nSubscribe to our newsletter today.")))
+      .otherwise(col("text"))
+    t(s, dir, "documents").select(col("doc_id"), planted.as("text"))
+  }
+
   /** documents.text with Gopher-rule trigger material planted
     * deterministically (word-soup has no bullets/symbols/ellipses and at
     * most one stopword, so the signals would be degenerate): bullets on
@@ -319,15 +339,11 @@ object SparkEntry {
     // corpus-frequency boilerplate-line removal (RefinedWeb/CCNet shape):
     // lines occurring in >= 50 distinct docs are removed from every doc.
     // Gated on the any-size JOIN tier (posexplode -> anti-join -> ordered
-    // rebuild); the broadcast tier is spec-asserted result-identical.
-    // A footer is planted on doc_id % 4 == 0 (125 docs at sf0.01) so a
-    // genuinely frequent line exists.
+    // rebuild) directly: `dropBoilerplateLines` takes it only past its
+    // broadcast cap, which no table here reaches.
     "q66_boilerplate_lines" -> ((s, dir) => {
-      val planted = when(col("doc_id") % 4 === 0,
-        concat(col("text"), lit("\nSubscribe to our newsletter today.")))
-        .otherwise(col("text"))
-      val docs = t(s, dir, "documents").select(col("doc_id"), planted.as("text"))
-      graft.dedup.Dedup.dropBoilerplateLinesJoin(docs, "text", "doc_id", minDocFreq = 50)
+      graft.dedup.Dedup.dropBoilerplateLinesJoin(docsWithPlantedFooter(s, dir), "text", "doc_id",
+          minDocFreq = 50)
         .select(col("doc_id"),
           length(col("text")).cast("long").as("n_chars_clean"),
           md5(col("text")).as("clean_md5"))
@@ -350,15 +366,12 @@ object SparkEntry {
         .orderBy("bin")
     }),
 
-    // the BROADCAST tier of boilerplate removal under the SAME oracle as
-    // q66 (the q55/q57 dual-gating pattern: both execution paths must
-    // produce identical bytes) — corpus never shuffles on this tier
+    // the public operator `dropBoilerplateLines` under the SAME oracle as
+    // q66: its frequent set fits the cap, so it takes the BROADCAST tier
+    // (the corpus never shuffles); both tiers must produce identical bytes
     "q67_boilerplate_broadcast" -> ((s, dir) => {
-      val planted = when(col("doc_id") % 4 === 0,
-        concat(col("text"), lit("\nSubscribe to our newsletter today.")))
-        .otherwise(col("text"))
-      val docs = t(s, dir, "documents").select(col("doc_id"), planted.as("text"))
-      graft.dedup.Dedup.dropBoilerplateLines(docs, "text", "doc_id", minDocFreq = 50)
+      graft.dedup.Dedup.dropBoilerplateLines(docsWithPlantedFooter(s, dir), "text", "doc_id",
+          minDocFreq = 50)
         .select(col("doc_id"),
           length(col("text")).cast("long").as("n_chars_clean"),
           md5(col("text")).as("clean_md5"))
@@ -549,12 +562,8 @@ object SparkEntry {
     // counts under the gate
     "q55_decontaminate" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      def words(c: Column) =
-        filter(split(lower(c), "\\s+"), w => w =!= lit(""))
-      val bench = docs
-        .filter(col("doc_id") % 37 === 0 && size(words(col("text"))) >= 21)
-        .select(concat_ws(" ", slice(words(col("text")), 6, 16)).as("btext"))
-      graft.dedup.Dedup.decontaminate(docs, "text", "doc_id", bench, "btext", w = 8)
+      graft.dedup.Dedup.decontaminate(docs, "text", "doc_id", decontaminationBench(docs), "btext",
+          w = 8)
         .groupBy("lang").agg(count(lit(1)).as("n"))
         .orderBy("lang")
     }),
@@ -593,35 +602,24 @@ object SparkEntry {
     }),
 
     // the SAME decontamination semantics through the any-size SEMI-JOIN
-    // tier (shuffled shingle hashes instead of a broadcast set — the path
-    // for benchmark sides too large to broadcast); one oracle, two
-    // execution paths
+    // tier (shuffled shingle hashes instead of a broadcast set), called
+    // directly; one oracle, two execution paths
     "q57_decontaminate_join" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      def words(c: Column) =
-        filter(split(lower(c), "\\s+"), w => w =!= lit(""))
-      val bench = docs
-        .filter(col("doc_id") % 37 === 0 && size(words(col("text"))) >= 21)
-        .select(concat_ws(" ", slice(words(col("text")), 6, 16)).as("btext"))
-      graft.dedup.Dedup.decontaminateJoin(docs, "text", "doc_id", bench, "btext", w = 8)
+      graft.dedup.Dedup.decontaminateJoin(docs, "text", "doc_id", decontaminationBench(docs),
+          "btext", w = 8)
         .groupBy("lang").agg(count(lit(1)).as("n"))
         .orderBy("lang")
     }),
 
-    // the SAME decontamination semantics through the BLOOM-PREFILTERED
-    // tier (distributed bloom build -> narrow prefilter -> exact confirm
-    // semi-join over only the possible hits): one oracle, THREE execution
-    // paths (q55 broadcast / q57 semi-join / q71 bloom) — the bloom only
-    // prefilters, the exact join confirms, so false positives cost
-    // shuffle bytes, never rows
+    // `decontaminate` with a one-shingle cap: its size check finds the
+    // benchmark oversized and reroutes to the semi-join tier — the path
+    // CorpusPrep takes for a benchmark too large to broadcast. Same
+    // oracle as q55 (the name predates the removal of the bloom tier)
     "q71_decontaminate_bloom" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      def words(c: Column) =
-        filter(split(lower(c), "\\s+"), w => w =!= lit(""))
-      val bench = docs
-        .filter(col("doc_id") % 37 === 0 && size(words(col("text"))) >= 21)
-        .select(concat_ws(" ", slice(words(col("text")), 6, 16)).as("btext"))
-      graft.dedup.Dedup.decontaminateBloom(docs, "text", "doc_id", bench, "btext", w = 8)
+      graft.dedup.Dedup.decontaminate(docs, "text", "doc_id", decontaminationBench(docs), "btext",
+          w = 8, maxBenchShingles = 1)
         .groupBy("lang").agg(count(lit(1)).as("n"))
         .orderBy("lang")
     }),
@@ -1541,6 +1539,55 @@ object SparkEntry {
         |      AND bullet_line_frac <= 0.9 AND ellipsis_line_frac <= 0.3
         |      AND alpha_word_frac >= 0.8 AND stopword_hits >= 2) AS INTEGER) AS keep
         |  FROM m)""".stripMargin
+    // decontamination restated on word-shingle STRINGS (Spark side uses
+    // 64-bit hashes of the same shingles — equal iff strings equal):
+    // survivors are docs whose 8-gram set misses every benchmark 8-gram.
+    // One oracle for every execution path (q55 / q57 / q71)
+    val decontaminateSql =
+      """WITH d AS (
+        |  SELECT doc_id, lang,
+        |    list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS ws
+        |  FROM documents),
+        |sh AS (
+        |  SELECT doc_id, lang,
+        |    (CASE WHEN len(ws) >= 8 THEN
+        |      list_distinct(list_transform(generate_series(1, len(ws) - 7),
+        |        i -> array_to_string(ws[i:i+7], ' ')))
+        |     WHEN len(ws) >= 1 THEN [array_to_string(ws, ' ')]
+        |     ELSE [] END) AS s
+        |  FROM d),
+        |bench AS (SELECT ws[6:21] AS bw FROM d WHERE doc_id % 37 = 0 AND len(ws) >= 21),
+        |bg AS (SELECT DISTINCT g FROM (
+        |  SELECT unnest(list_transform(generate_series(1, len(bw) - 7),
+        |    i -> array_to_string(bw[i:i+7], ' '))) AS g FROM bench))
+        |SELECT lang, count(*) AS n
+        |FROM sh, (SELECT list(g) AS bl FROM bg) b
+        |WHERE len(list_intersect(s, b.bl)) = 0
+        |GROUP BY 1 ORDER BY 1""".stripMargin
+    // boilerplate lines: same planted footer, doc-frequency >= 50 set,
+    // per-doc rebuild; the rewrite drops blank lines by construction
+    // in BOTH engines (nonempty-line arrays rejoined). One oracle for
+    // both tiers (q66 join / q67 broadcast)
+    val boilerplateSql =
+      """WITH p AS (
+        |  SELECT doc_id,
+        |    CASE WHEN doc_id % 4 = 0
+        |      THEN text || chr(10) || 'Subscribe to our newsletter today.'
+        |      ELSE text END AS t2
+        |  FROM documents),
+        |l AS (SELECT doc_id,
+        |        list_filter(string_split(t2, chr(10)), x -> len(x) > 0) AS ls
+        |      FROM p),
+        |e AS (SELECT unnest(list_distinct(ls)) AS line FROM l),
+        |freq AS (SELECT line FROM
+        |          (SELECT line, count(*) AS df FROM e GROUP BY 1) WHERE df >= 50),
+        |fl AS (SELECT coalesce(list(line), []) AS f FROM freq)
+        |SELECT doc_id,
+        |  CAST(len(coalesce(array_to_string(kept, chr(10)), '')) AS BIGINT) AS n_chars_clean,
+        |  md5(coalesce(array_to_string(kept, chr(10)), '')) AS clean_md5
+        |FROM (SELECT doc_id, list_filter(ls, x -> NOT list_contains(f, x)) AS kept
+        |      FROM l CROSS JOIN fl)
+        |ORDER BY doc_id""".stripMargin
     Map(
       "q1_agg" ->
         "SELECT l_returnflag, sum(l_quantity) AS sum_qty FROM lineitem GROUP BY 1 ORDER BY 1",
@@ -1617,50 +1664,8 @@ object SparkEntry {
            |  round(avg(conf), 6) AS mean_conf6,
            |  CAST(CAST(sum(correct) AS BIGINT) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS accuracy
            |FROM b GROUP BY 1 ORDER BY 1""".stripMargin,
-      // boilerplate lines: same planted footer, doc-frequency >= 50 set,
-      // per-doc rebuild; the rewrite drops blank lines by construction
-      // in BOTH engines (nonempty-line arrays rejoined)
-      // broadcast tier: SAME oracle as q66 (dual-gated execution paths)
-      "q67_boilerplate_broadcast" ->
-        """WITH p AS (
-          |  SELECT doc_id,
-          |    CASE WHEN doc_id % 4 = 0
-          |      THEN text || chr(10) || 'Subscribe to our newsletter today.'
-          |      ELSE text END AS t2
-          |  FROM documents),
-          |l AS (SELECT doc_id,
-          |        list_filter(string_split(t2, chr(10)), x -> len(x) > 0) AS ls
-          |      FROM p),
-          |e AS (SELECT unnest(list_distinct(ls)) AS line FROM l),
-          |freq AS (SELECT line FROM
-          |          (SELECT line, count(*) AS df FROM e GROUP BY 1) WHERE df >= 50),
-          |fl AS (SELECT coalesce(list(line), []) AS f FROM freq)
-          |SELECT doc_id,
-          |  CAST(len(coalesce(array_to_string(kept, chr(10)), '')) AS BIGINT) AS n_chars_clean,
-          |  md5(coalesce(array_to_string(kept, chr(10)), '')) AS clean_md5
-          |FROM (SELECT doc_id, list_filter(ls, x -> NOT list_contains(f, x)) AS kept
-          |      FROM l CROSS JOIN fl)
-          |ORDER BY doc_id""".stripMargin,
-      "q66_boilerplate_lines" ->
-        """WITH p AS (
-          |  SELECT doc_id,
-          |    CASE WHEN doc_id % 4 = 0
-          |      THEN text || chr(10) || 'Subscribe to our newsletter today.'
-          |      ELSE text END AS t2
-          |  FROM documents),
-          |l AS (SELECT doc_id,
-          |        list_filter(string_split(t2, chr(10)), x -> len(x) > 0) AS ls
-          |      FROM p),
-          |e AS (SELECT unnest(list_distinct(ls)) AS line FROM l),
-          |freq AS (SELECT line FROM
-          |          (SELECT line, count(*) AS df FROM e GROUP BY 1) WHERE df >= 50),
-          |fl AS (SELECT coalesce(list(line), []) AS f FROM freq)
-          |SELECT doc_id,
-          |  CAST(len(coalesce(array_to_string(kept, chr(10)), '')) AS BIGINT) AS n_chars_clean,
-          |  md5(coalesce(array_to_string(kept, chr(10)), '')) AS clean_md5
-          |FROM (SELECT doc_id, list_filter(ls, x -> NOT list_contains(f, x)) AS kept
-          |      FROM l CROSS JOIN fl)
-          |ORDER BY doc_id""".stripMargin,
+      "q67_boilerplate_broadcast" -> boilerplateSql,
+      "q66_boilerplate_lines" -> boilerplateSql,
       // C4 line filter: same planted construction, same line predicate,
       // md5 of the rejoined survivors
       "q65_c4_line_filter" ->
@@ -2389,30 +2394,7 @@ object SparkEntry {
           |SELECT lang, count(*) AS n FROM d
           |WHERE doc_id NOT IN (SELECT node FROM losers)
           |GROUP BY 1 ORDER BY 1""".stripMargin,
-      // decontamination restated on word-shingle STRINGS (Spark side uses
-      // 64-bit hashes of the same shingles — equal iff strings equal):
-      // survivors are docs whose 8-gram set misses every benchmark 8-gram
-      "q55_decontaminate" ->
-        """WITH d AS (
-          |  SELECT doc_id, lang,
-          |    list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS ws
-          |  FROM documents),
-          |sh AS (
-          |  SELECT doc_id, lang,
-          |    (CASE WHEN len(ws) >= 8 THEN
-          |      list_distinct(list_transform(generate_series(1, len(ws) - 7),
-          |        i -> array_to_string(ws[i:i+7], ' ')))
-          |     WHEN len(ws) >= 1 THEN [array_to_string(ws, ' ')]
-          |     ELSE [] END) AS s
-          |  FROM d),
-          |bench AS (SELECT ws[6:21] AS bw FROM d WHERE doc_id % 37 = 0 AND len(ws) >= 21),
-          |bg AS (SELECT DISTINCT g FROM (
-          |  SELECT unnest(list_transform(generate_series(1, len(bw) - 7),
-          |    i -> array_to_string(bw[i:i+7], ' '))) AS g FROM bench))
-          |SELECT lang, count(*) AS n
-          |FROM sh, (SELECT list(g) AS bl FROM bg) b
-          |WHERE len(list_intersect(s, b.bl)) = 0
-          |GROUP BY 1 ORDER BY 1""".stripMargin,
+      "q55_decontaminate" -> decontaminateSql,
       // contamination audit: distinct (id, gram) pairs both sides, one
       // gram join, two count-distincts per bench item; the q55 gram and
       // bench-window conventions verbatim
@@ -2472,52 +2454,10 @@ object SparkEntry {
            |  CAST(coalesce(h.n_docs, 0) AS BIGINT) AS n_docs
            |FROM v0 LEFT JOIN h ON v0.val_id = h.val_id
            |ORDER BY val_id""".stripMargin,
-      // identical semantics to q55 through the semi-join tier: same oracle
-      "q57_decontaminate_join" ->
-        """WITH d AS (
-          |  SELECT doc_id, lang,
-          |    list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS ws
-          |  FROM documents),
-          |sh AS (
-          |  SELECT doc_id, lang,
-          |    (CASE WHEN len(ws) >= 8 THEN
-          |      list_distinct(list_transform(generate_series(1, len(ws) - 7),
-          |        i -> array_to_string(ws[i:i+7], ' ')))
-          |     WHEN len(ws) >= 1 THEN [array_to_string(ws, ' ')]
-          |     ELSE [] END) AS s
-          |  FROM d),
-          |bench AS (SELECT ws[6:21] AS bw FROM d WHERE doc_id % 37 = 0 AND len(ws) >= 21),
-          |bg AS (SELECT DISTINCT g FROM (
-          |  SELECT unnest(list_transform(generate_series(1, len(bw) - 7),
-          |    i -> array_to_string(bw[i:i+7], ' '))) AS g FROM bench))
-          |SELECT lang, count(*) AS n
-          |FROM sh, (SELECT list(g) AS bl FROM bg) b
-          |WHERE len(list_intersect(s, b.bl)) = 0
-          |GROUP BY 1 ORDER BY 1""".stripMargin,
-      // identical semantics to q55 through the bloom-prefiltered tier:
-      // same oracle, third execution path (bloom = prefilter only; the
-      // exact confirm join decides membership)
-      "q71_decontaminate_bloom" ->
-        """WITH d AS (
-          |  SELECT doc_id, lang,
-          |    list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS ws
-          |  FROM documents),
-          |sh AS (
-          |  SELECT doc_id, lang,
-          |    (CASE WHEN len(ws) >= 8 THEN
-          |      list_distinct(list_transform(generate_series(1, len(ws) - 7),
-          |        i -> array_to_string(ws[i:i+7], ' ')))
-          |     WHEN len(ws) >= 1 THEN [array_to_string(ws, ' ')]
-          |     ELSE [] END) AS s
-          |  FROM d),
-          |bench AS (SELECT ws[6:21] AS bw FROM d WHERE doc_id % 37 = 0 AND len(ws) >= 21),
-          |bg AS (SELECT DISTINCT g FROM (
-          |  SELECT unnest(list_transform(generate_series(1, len(bw) - 7),
-          |    i -> array_to_string(bw[i:i+7], ' '))) AS g FROM bench))
-          |SELECT lang, count(*) AS n
-          |FROM sh, (SELECT list(g) AS bl FROM bg) b
-          |WHERE len(list_intersect(s, b.bl)) = 0
-          |GROUP BY 1 ORDER BY 1""".stripMargin,
+      // q55's semantics through the semi-join tier (q57) and through
+      // `decontaminate`'s reroute past its cap (q71)
+      "q57_decontaminate_join" -> decontaminateSql,
+      "q71_decontaminate_bloom" -> decontaminateSql,
       // keep-first line dedup: position-aware explode (zipped unnests),
       // one window keeps the global first occurrence of every line,
       // docs rebuilt in line order (empty rebuilds coalesce to '')

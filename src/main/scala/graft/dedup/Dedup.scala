@@ -22,21 +22,6 @@ import graft.plans.GraftFunctions.wordGrams
   */
 object Dedup {
 
-  /** `decontaminate`'s broadcast-size guard tripped: the benchmark side
-    * exceeds the broadcastable shingle cap. Subtype of
-    * IllegalArgumentException so existing callers still see an IAE, but
-    * catchable on its own — CorpusPrep's auto-fallback to the semi-join
-    * tier catches EXACTLY this and nothing else. */
-  final class BenchmarkTooLargeException(msg: String)
-    extends IllegalArgumentException(msg)
-
-  /** `dropBoilerplateLines`' broadcast-size guard tripped: more frequent
-    * lines than the broadcastable cap. Same design as
-    * [[BenchmarkTooLargeException]] — catchable on its own so CorpusPrep's
-    * auto-fallback to the join tier can't swallow genuine bugs. */
-  final class TooManyFrequentLinesException(msg: String)
-    extends IllegalArgumentException(msg)
-
   // ---- shingling / hashing kernels (pure, deterministic) ----
 
   /** 64-bit avalanche mix (splitmix64 finalizer) — stable across JVMs. */
@@ -175,8 +160,7 @@ object Dedup {
     * SIMULTANEOUSLY before conversion — at the 50M-row caps of
     * `decontaminate`/`dropBoilerplateLines` that is multi-GB of driver
     * heap (vs the ~400 MB the primitive array costs), so the driver could
-    * OOM before the size-guard exception ever fired — and a driver OOM
-    * defeats CorpusPrep's catch-and-fallback to the join tier.
+    * OOM before the size check ever rerouted to the join tier.
     * `toLocalIterator` holds one partition's batch at a time; rows are
     * unboxed into the growing primitive builder as they stream. */
   private def collectLongColumn(df: DataFrame): Array[Long] = {
@@ -513,22 +497,22 @@ object Dedup {
     * least one word w-shingle with any benchmark document — the standard
     * defense against evaluation data leaking into a training corpus.
     *
-    * Scale shape: a benchmark is small by definition (MBs against a
-    * 100 TB corpus), so its distinct shingle hashes are collected and
-    * broadcast and the corpus is filtered in a SINGLE scan with
-    * ZERO shuffles — no join, no exchange, embarrassingly parallel. The
-    * `maxBenchShingles` guard fails fast if someone passes a "benchmark"
-    * too big to broadcast (at that point it is corpus-vs-corpus overlap —
-    * use `minhashDupPairs`/`dropByPairs` instead).
-    *
-    * Driver/executor memory: the guard runs BEFORE materialization (the
-    * fetch is capped at maxBenchShingles+1 rows and STREAMED into a
-    * primitive array — `collectLongColumn` — so an oversized benchmark
-    * fails on the cap, never by OOMing the driver on boxed rows first),
-    * and the broadcast is a SORTED primitive Array[Long] probed by binary
-    * search — 8 bytes/shingle flat (~400 MB at the 50M default cap),
-    * not the 40+ bytes/entry a boxed Set[Long] costs. Membership per
-    * corpus shingle is O(log n) over cache-friendly sorted longs. */
+    * The tier follows from one size check: the benchmark's distinct
+    * shingle hashes are fetched, capped at `maxBenchShingles + 1` rows and
+    * STREAMED into a primitive array (`collectLongColumn`), so an
+    * oversized benchmark is detected on the cap, never by OOMing the
+    * driver on boxed rows.
+    *  - At most `maxBenchShingles` (a benchmark is small by definition:
+    *    MBs against a 100 TB corpus): the hashes broadcast as a SORTED
+    *    primitive Array[Long] probed by binary search — 8 bytes/shingle
+    *    flat (~400 MB at the 50M default cap), O(log n) per corpus
+    *    shingle — and the corpus is filtered in a SINGLE scan with ZERO
+    *    shuffles.
+    *  - Over the cap (a held-out corpus slice, a union of many
+    *    benchmarks): the result is `decontaminateJoin`'s, which shuffles
+    *    the corpus's shingle hashes but takes a benchmark of any size.
+    * Both tiers give the same rows (DedupSpec asserts it). For
+    * corpus-vs-corpus overlap use `minhashDupPairs`/`dropByPairs`. */
   def decontaminate(corpus: DataFrame, textCol: String, idCol: String,
                     benchmark: DataFrame, benchTextCol: String, w: Int = 8,
                     maxBenchShingles: Int = 50000000): DataFrame = {
@@ -537,41 +521,33 @@ object Dedup {
       .select(F.explode(shinglesUdf(F.col(benchTextCol), F.lit(w))).as("g"))
       .distinct().limit(maxBenchShingles + 1))
     if (grams.length > maxBenchShingles)
-      // DEDICATED type, not a bare require: callers with a shuffled
-      // fallback (CorpusPrep) must be able to catch EXACTLY the
-      // size-guard trip without also swallowing genuine argument bugs
-      throw new BenchmarkTooLargeException(
-        s"benchmark has > $maxBenchShingles distinct shingles " +
-          s"(~${maxBenchShingles.toLong * 8 / (1 << 20)} MB broadcast cap) — " +
-          "too large to broadcast; use decontaminateJoin (shuffle-based, any size) " +
-          "or minhashDupPairs/dropByPairs for corpus-vs-corpus overlap")
-    java.util.Arrays.sort(grams)
-    val bc = corpus.sparkSession.sparkContext.broadcast(grams)
-    val contaminated = F.udf { (text: String) =>
-      val g = bc.value
-      shingleHashes(text, w).exists(h => java.util.Arrays.binarySearch(g, h) >= 0)
+      decontaminateJoin(corpus, textCol, idCol, benchmark, benchTextCol, w)
+    else {
+      java.util.Arrays.sort(grams)
+      val bc = corpus.sparkSession.sparkContext.broadcast(grams)
+      val contaminated = F.udf { (text: String) =>
+        val g = bc.value
+        shingleHashes(text, w).exists(h => java.util.Arrays.binarySearch(g, h) >= 0)
+      }
+      corpus.filter(!contaminated(F.col(textCol)))
     }
-    corpus.filter(!contaminated(F.col(textCol)))
   }
 
-  /** Benchmark decontamination via DISTRIBUTED SEMI-JOIN — the tier above
-    * `decontaminate` when the "benchmark" side's distinct shingles exceed
-    * broadcast size (a held-out corpus slice, a union of many benchmarks).
+  /** The any-size tier `decontaminate` takes when the benchmark's
+    * distinct shingles exceed its broadcast cap.
     *
     * Scale shape: both sides explode to (id, shingle-hash) / (shingle-hash)
     * rows — 8–16 bytes each, never text — and meet in one hash-partitioned
     * LEFT SEMI join; contaminated ids (at most the contaminated fraction,
     * 8 bytes each) come back to the corpus as a second, AQE-broadcastable
     * LEFT ANTI join. Cost is one shuffle of the corpus's shingle hashes
-    * (~token count x 16 B ≈ a few % of corpus bytes) — the honest price of
-    * an arbitrarily large benchmark side; below the broadcast cap,
-    * `decontaminate`'s zero-shuffle scan strictly dominates.
-    *
-    * Result-identical to `decontaminate` on any input (same shingling,
-    * same membership semantics) — DedupSpec asserts the equivalence. */
-  def decontaminateJoin(corpus: DataFrame, textCol: String, idCol: String,
-                        benchmark: DataFrame, benchTextCol: String,
-                        w: Int = 8): DataFrame = {
+    * (~token count x 16 B ≈ a few % of corpus bytes) — the price of an
+    * arbitrarily large benchmark side; below the cap the broadcast scan
+    * strictly dominates. Same shingling and membership semantics as the
+    * broadcast tier. */
+  private[graft] def decontaminateJoin(corpus: DataFrame, textCol: String, idCol: String,
+                                       benchmark: DataFrame, benchTextCol: String,
+                                       w: Int = 8): DataFrame = {
     require(w >= 1, s"shingle width w must be >= 1, got $w")
     val bg = benchmark
       .select(F.explode(shinglesUdf(F.col(benchTextCol), F.lit(w))).as("g"))
@@ -604,33 +580,31 @@ object Dedup {
     * document — the corpus-level complement to C4Rules' per-line
     * heuristics (which can only judge a line by its own shape).
     *
-    * BROADCAST tier: lines hash to 64 bits BEFORE the frequency count,
-    * so the one aggregation shuffle moves 8-byte keys (per-doc-distinct
-    * via array_distinct, so the count is doc-frequency without a
-    * countDistinct pair shuffle), the frequent set broadcasts as a
-    * SORTED primitive `Array[Long]` (8 B/line flat — ~400 MB at the
-    * 50M-line cap, vs 40+ B/entry for boxed strings), and the rewrite is
-    * a NARROW per-row pass probing each line by BINARY SEARCH — O(lines
-    * x log n) per doc, not the O(lines x n) an `array_contains` scan
-    * costs: the corpus itself is never shuffled. Guarded: fails loudly
-    * past `maxFrequentLines` (use the join tier then).
+    * The tier follows from one size check: lines hash to 64 bits BEFORE
+    * the frequency count, so the one aggregation shuffle moves 8-byte
+    * keys (per-doc-distinct via array_distinct, so the count is
+    * doc-frequency without a countDistinct pair shuffle), and the
+    * frequent hashes are fetched capped at `maxFrequentLines + 1` rows,
+    * streamed into a primitive array.
+    *  - At most `maxFrequentLines`: the set broadcasts as a SORTED
+    *    primitive `Array[Long]` (8 B/line flat — ~400 MB at the 50M-line
+    *    cap, vs 40+ B/entry for boxed strings), and the rewrite is a
+    *    NARROW per-row pass probing each line by BINARY SEARCH — O(lines
+    *    x log n) per doc: the corpus itself is never shuffled.
+    *  - Over the cap: the result is `dropBoilerplateLinesJoin`'s, which
+    *    compares exact strings over two shuffles of line-sized rows.
     *
     * Hash-membership stance (same as `decontaminate`): a 64-bit
     * collision between a document line and one of <= 50M frequent lines
     * removes a non-boilerplate line with probability ~n/2^64 per
     * distinct line — negligible against the boilerplate threshold's own
-    * fuzziness; the join tier compares exact strings when that matters.
-    * Output: input columns with `textCol` rewritten. */
+    * fuzziness. Output: input columns with `textCol` rewritten. */
   def dropBoilerplateLines(docs: DataFrame, textCol: String, idCol: String,
                            minDocFreq: Long,
                            maxFrequentLines: Int = 50000000): DataFrame = {
     require(minDocFreq >= 2, s"minDocFreq must be >= 2, got $minDocFreq")
     val text = F.col(textCol)
     val hashUdf = F.udf((s: String) => lineHash(s))
-    // streamed primitive fetch (collectLongColumn): the boxed-Row collect
-    // this replaced held cap+1 Row objects simultaneously — multi-GB of
-    // driver heap at the 50M cap, an OOM risk that defeated the fail-loud
-    // guard below
     val freq = collectLongColumn(docs
       .select(F.explode(F.array_distinct(nonEmptyLines(text))).as("__line"))
       .select(hashUdf(F.col("__line")).as("__h"))
@@ -638,31 +612,29 @@ object Dedup {
       .filter(F.col("__df") >= minDocFreq)
       .select("__h").limit(maxFrequentLines + 1))
     if (freq.length > maxFrequentLines)
-      throw new TooManyFrequentLinesException(
-        s"> $maxFrequentLines corpus-frequent lines " +
-          s"(~${maxFrequentLines.toLong * 8 / (1 << 20)} MB broadcast cap) — " +
-          "too many to broadcast; use dropBoilerplateLinesJoin (shuffle-based, any size)")
-    java.util.Arrays.sort(freq)
-    val bc = docs.sparkSession.sparkContext.broadcast(freq)
-    val cleanUdf = F.udf { (t: String) =>
-      val f = bc.value
-      // split/filter/join mirrors the join tier's
-      // nonEmptyLines -> array_join semantics byte-for-byte
-      t.split("\n", -1).iterator
-        .filter(l => l.nonEmpty && java.util.Arrays.binarySearch(f, lineHash(l)) < 0)
-        .mkString("\n")
+      dropBoilerplateLinesJoin(docs, textCol, idCol, minDocFreq)
+    else {
+      java.util.Arrays.sort(freq)
+      val bc = docs.sparkSession.sparkContext.broadcast(freq)
+      val cleanUdf = F.udf { (t: String) =>
+        val f = bc.value
+        // split/filter/join mirrors the join tier's
+        // nonEmptyLines -> array_join semantics byte-for-byte
+        t.split("\n", -1).iterator
+          .filter(l => l.nonEmpty && java.util.Arrays.binarySearch(f, lineHash(l)) < 0)
+          .mkString("\n")
+      }
+      docs.withColumn(textCol, cleanUdf(text))
     }
-    docs.withColumn(textCol, cleanUdf(text))
   }
 
-  /** Any-size tier of `dropBoilerplateLines`: position-exploded lines
-    * anti-join the frequent set (both sides id+line rows, hash
-    * partitioned), then docs are rebuilt in line order. Two shuffles of
-    * line-sized rows — the honest price when the frequent set itself is
-    * too large to broadcast. Result-identical to the broadcast tier
-    * (DedupSpec asserts it). */
-  def dropBoilerplateLinesJoin(docs: DataFrame, textCol: String, idCol: String,
-                               minDocFreq: Long): DataFrame = {
+  /** The any-size tier `dropBoilerplateLines` takes when the frequent
+    * set exceeds its broadcast cap: position-exploded lines anti-join the
+    * frequent set (both sides id+line rows, hash partitioned), then docs
+    * are rebuilt in line order. Two shuffles of line-sized rows. Same
+    * output as the broadcast tier (DedupSpec asserts it). */
+  private[graft] def dropBoilerplateLinesJoin(docs: DataFrame, textCol: String, idCol: String,
+                                              minDocFreq: Long): DataFrame = {
     require(minDocFreq >= 2, s"minDocFreq must be >= 2, got $minDocFreq")
     val text = F.col(textCol)
     val exploded = docs.select(F.col(idCol),
@@ -719,71 +691,6 @@ object Dedup {
         F.bit_count(F.col("pay_a").bitwiseXOR(F.col("pay_b"))).as("hamming"))
       .distinct()
       .filter(F.col("hamming") <= maxHamming)
-  }
-
-  /** Benchmark decontamination via a BLOOM-PREFILTERED exact semi-join —
-    * the middle tier between `decontaminate` (zero-shuffle, but the whole
-    * 8-byte-per-shingle sorted array must broadcast) and
-    * `decontaminateJoin` (any size, but the ENTIRE corpus's shingle
-    * hashes shuffle into the join).
-    *
-    * Shape: the benchmark's distinct shingle hashes build a distributed
-    * `BloomFilter` (`df.stat.bloomFilter` — partial sketches merged on
-    * the driver; ~1.2 BYTES/shingle at fpp=0.01 vs the sorted array's 8,
-    * so the broadcastable benchmark size rises ~6.7×). The corpus is then
-    * prefiltered NARROWLY: a per-row pass keeps only the shingles the
-    * bloom might contain, and docs with zero possible hits — the
-    * overwhelming majority of a web corpus against any benchmark — never
-    * reach a shuffle at all. Only the surviving (id, hit-shingle) rows
-    * (true hits + the fpp share of false positives) meet the benchmark in
-    * the exact semi-join, so the q57-tier shuffle shrinks by roughly the
-    * uncontaminated fraction (~50× at 1% contamination + 1% fpp).
-    *
-    * The bloom only PREFILTERS — membership is confirmed by the exact
-    * join, so false positives cost shuffle bytes, never correctness:
-    * result-identical to `decontaminate`/`decontaminateJoin` on any input
-    * (DedupSpec asserts all three agree; q71 gates this tier on q55's
-    * oracle).
-    *
-    * `expectedShingles` sizes the filter; pass a corpus-level estimate at
-    * scale (0 = count the benchmark side first — one cheap extra job, the
-    * bench side is the small one by assumption). The benchmark shingle
-    * frame is persisted (it is read twice: bloom build + confirm join)
-    * and the operator OWNS the lifecycle: the contaminated-id list — at
-    * most the contaminated fraction, 8 bytes per id — is snapshotted by
-    * `Materialize.snapshotReleasing`, which then unpersists the shingle
-    * cache, and the bloom broadcast is destroyed after it, instead of
-    * accumulating executor cache and broadcast memory across calls in a
-    * long-lived session. The snapshot has no lineage back to the released
-    * inputs: it survives executor loss only when the session has a
-    * checkpoint dir, and otherwise re-running the operator is the
-    * recovery path. */
-  def decontaminateBloom(corpus: DataFrame, textCol: String, idCol: String,
-                         benchmark: DataFrame, benchTextCol: String,
-                         w: Int = 8, fpp: Double = 0.01,
-                         expectedShingles: Long = 0L): DataFrame = {
-    require(w >= 1, s"shingle width w must be >= 1, got $w")
-    require(fpp > 0.0 && fpp < 1.0, s"fpp must be in (0,1), got $fpp")
-    val bg = benchmark
-      .select(F.explode(shinglesUdf(F.col(benchTextCol), F.lit(w))).as("g"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val expected = if (expectedShingles > 0L) expectedShingles else bg.count()
-    val bloom = bg.stat.bloomFilter("g", math.max(expected, 1L), fpp)
-    val bc = corpus.sparkSession.sparkContext.broadcast(bloom)
-    val hitsUdf = F.udf { (text: String) =>
-      // sorted-distinct: each possibly-contaminating shingle joins once
-      sortedDistinct(shingleHashes(text, w).filter(h => bc.value.mightContainLong(h)))
-    }
-    val contaminated =
-      try Materialize.snapshotReleasing(bg)(corpus
-        .select(F.col(idCol), hitsUdf(F.col(textCol)).as("__hits"))
-        .filter(F.size(F.col("__hits")) > 0)
-        .select(F.col(idCol), F.explode(F.col("__hits")).as("g"))
-        .join(bg, Seq("g"), "left_semi")
-        .select(idCol).distinct())
-      finally bc.destroy()
-    corpus.join(contaminated, Seq(idCol), "left_anti")
   }
 
   /** CORPUS-WIDE exact line dedup, KEEP-FIRST (the line-granularity form

@@ -17,13 +17,13 @@ import graft.quality.Rules
   *       javascript/brace line rules + lorem-ipsum doc drop, q65 —
   *       BEFORE dedup so fingerprints see the text to be trained on)
   *   0b. boilerplate removal  (optional: corpus-frequency line drop,
-  *       q66/q67 — broadcast tier with dedicated-exception fallback to
-  *       the any-size join tier)
+  *       q66/q67 — `dropBoilerplateLines` picks its broadcast or join
+  *       tier by the frequent set's size)
   *   1. exact dedup           (keep min-id per fingerprint — q12 family)
   *   2. near-dup drop         (minhash LSH -> components -> canonical, q51)
-  *   3. decontamination       (benchmark shingle broadcast, q55; auto-
-  *       falls back to the any-size semi-join tier q57 when the
-  *       benchmark exceeds broadcast size; optional)
+  *   3. decontamination       (optional: `decontaminate` broadcasts the
+  *       benchmark's shingles, q55, or takes the any-size semi-join
+  *       tier, q57, when they exceed `maxBenchShingles`)
   *   4. quality rules         (reference junk thresholds — q15 family;
   *       optional repetition gates: dup-line fraction + dup-line CHAR
   *       fraction q62, top-bigram char fraction q64)
@@ -37,8 +37,8 @@ import graft.quality.Rules
   *   5. sequence packing      (token-budget chunk layout, q56)
   *
   * Scale shape: stages 1–2 shuffle ids/hashes only, stage 3 is a
-  * shuffle-free broadcast filter, stage 4 is a narrow filter, stage 5 is
-  * one shard-keyed window. With `report=true` the heavy intermediates are
+  * shuffle-free broadcast filter while the benchmark fits its cap, stage
+  * 4 is a narrow filter, stage 5 is one shard-keyed window. With `report=true` the heavy intermediates are
   * snapshotted (`Materialize.snapshot`) and every stage count rides those
   * SAME jobs as an `observe` metric (CollectMetrics accumulators) — the
   * report is FREE: zero extra jobs, no re-scan of the raw input
@@ -84,19 +84,12 @@ object CorpusPrep {
     // lines in >= minDocFreq distinct docs are removed from every doc.
     // Runs AFTER the per-line C4 rules (they judge a line by its shape,
     // this by corpus frequency) and BEFORE dedup for the same reason as
-    // stage 0. Broadcast tier first (corpus never shuffles; its frequency
-    // aggregate is one extra eager scan of the cleaned input), dedicated-
-    // exception fallback to the any-size join tier — the decontaminate
-    // pattern. Docs that were pure boilerplate drop.
+    // stage 0. The operator's frequency aggregate is one extra eager
+    // scan of the cleaned input; it then picks its tier by the frequent
+    // set's size. Docs that were pure boilerplate drop.
     def boilerplateFree(df: DataFrame): DataFrame = boilerplateMinDocFreq match {
       case Some(mdf) =>
-        val cleaned =
-          try Dedup.dropBoilerplateLines(df, textCol, idCol, mdf)
-          catch {
-            case _: Dedup.TooManyFrequentLinesException =>
-              Dedup.dropBoilerplateLinesJoin(df, textCol, idCol, mdf)
-          }
-        cleaned.filter(F.length(text) > 0)
+        Dedup.dropBoilerplateLines(df, textCol, idCol, mdf).filter(F.length(text) > 0)
       case None => df
     }
     def preCleaned(df: DataFrame): DataFrame = boilerplateFree(lineCleaned(df))
@@ -169,21 +162,13 @@ object CorpusPrep {
       Packing.packSequential(df,
         tokensOverride.getOrElse(TextFunctions.tokenCount(text)),
         shardCol, idCol, tokenBudget)
-    // broadcast decontamination when the benchmark fits (zero shuffles);
-    // AUTO-FALLBACK to the any-size semi-join tier when the guard trips —
-    // a composed 100 TB prep job must degrade to the shuffled plan, not
-    // die at this stage (the guard's collect is capped, so probing is
-    // safe). Both tiers are result-identical (DedupSpec).
+    // broadcast decontamination when the benchmark fits (zero shuffles),
+    // the any-size semi-join tier past `maxBenchShingles`: a composed
+    // 100 TB prep job degrades to the shuffled plan instead of dying at
+    // this stage. Both tiers give the same rows (DedupSpec).
     def decontaminated(df: DataFrame, b: DataFrame): DataFrame =
-      try Dedup.decontaminate(df, textCol, idCol, b, benchTextCol,
+      Dedup.decontaminate(df, textCol, idCol, b, benchTextCol,
         maxBenchShingles = maxBenchShingles)
-      catch {
-        // ONLY the size-guard trip reroutes (dedicated type) — any other
-        // argument error is a genuine bug and must propagate, not be
-        // silently "healed" by the shuffled tier
-        case _: Dedup.BenchmarkTooLargeException =>
-          Dedup.decontaminateJoin(df, textCol, idCol, b, benchTextCol)
-      }
 
     // stage-2 survivor policy: min-id by default; `nearDupKeepBy` keeps
     // the cluster member maximizing the given score instead (q95 — keep

@@ -54,10 +54,21 @@ class JobBudgetSpec extends AnyFunSuite {
       "q95_drop_near_dups_best" -> 34L))
   }
 
-  // the bloom decontamination tier: the bench-side count and bloom jobs,
-  // then the contaminated-id snapshot
+  // the decontamination and boilerplate-line tiers: q55 and q67 take the
+  // broadcast tier (the capped collect, then the scan), q57 and q66 call
+  // the join tier directly
+  test("a warm pass over q55, q57, q66 and q67 stays within each query's job budget") {
+    assertWarmBudgets(Seq(
+      "q55_decontaminate" -> 6L,
+      "q57_decontaminate_join" -> 8L,
+      "q66_boilerplate_lines" -> 7L,
+      "q67_boilerplate_broadcast" -> 5L))
+  }
+
+  // decontaminate past its cap: the capped collect of the benchmark's
+  // shingles, then the semi-join tier's jobs
   test("a warm pass over q71 stays within its job budget") {
-    assertWarmBudgets(Seq("q71_decontaminate_bloom" -> 14L))
+    assertWarmBudgets(Seq("q71_decontaminate_bloom" -> 10L))
   }
 
   // minhashDupPairs releases its shingle cache before it returns, so no

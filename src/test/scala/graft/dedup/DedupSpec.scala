@@ -316,18 +316,20 @@ class DedupSpec extends AnyFunSuite {
       }
       assert(exchanges.isEmpty, "decontamination must not shuffle the corpus")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    // the size-guard trip is a DEDICATED type (still an IAE for old
-    // callers): CorpusPrep's auto-fallback catches exactly this...
-    intercept[Dedup.BenchmarkTooLargeException] {
-      Dedup.decontaminate(corpus, "text", "id", bench, "btext", w = 8,
-        maxBenchShingles = 1)
-    }
-    // ...while a genuine argument bug raises a PLAIN IAE that the
-    // fallback must NOT swallow — the two are distinguishable by type
-    val plain = intercept[IllegalArgumentException] {
+    // past the shingle cap the operator reroutes to the semi-join tier:
+    // same survivors as calling that tier directly, and a shuffled plan
+    def survivors(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getLong(0)).toSet
+    val rerouted = Dedup.decontaminate(corpus, "text", "id", bench, "btext", w = 8,
+      maxBenchShingles = 1)
+    assert(survivors(rerouted) ==
+      survivors(Dedup.decontaminateJoin(corpus, "text", "id", bench, "btext", w = 8)))
+    assert(survivors(rerouted) == (5 until 40).map(_.toLong).toSet)
+    assert(rerouted.queryExecution.executedPlan.toString.contains("LeftSemi"),
+      "an oversized benchmark must take the semi-join tier")
+    // a bad argument still raises
+    intercept[IllegalArgumentException] {
       Dedup.decontaminate(corpus, "text", "id", bench, "btext", w = 0)
     }
-    assert(!plain.isInstanceOf[Dedup.BenchmarkTooLargeException])
   }
 
   test("jaccard merge-count kernel: parity with boxed-set math, no input mutation") {
@@ -372,12 +374,11 @@ class DedupSpec extends AnyFunSuite {
     assert(viaBroadcast.values.forall(t =>
       !t.contains("COMMON FOOTER") && !t.contains("COMMON HEADER")))
     assert(viaBroadcast.values.count(_.nonEmpty) == 20, "no doc drops, only line edits")
-    // broadcast guard: every line frequent + tiny cap -> loud failure
+    // size check: every line frequent + tiny cap -> the join tier's output
     val degenerate = (0 until 10).map(i => (i.toLong, "same\nlines\neverywhere")).toDF("id", "text")
-    intercept[IllegalArgumentException] {
-      Dedup.dropBoilerplateLines(degenerate, "text", "id", minDocFreq = 5,
-        maxFrequentLines = 2)
-    }
+    assert(strip(Dedup.dropBoilerplateLines(degenerate, "text", "id", minDocFreq = 5,
+        maxFrequentLines = 2)) ==
+      strip(Dedup.dropBoilerplateLinesJoin(degenerate, "text", "id", minDocFreq = 5)))
     // broadcast-tier plan: the frequent-hash set is collected eagerly
     // (its one groupBy shuffle runs at call time, over 8-byte keys) and
     // ships as a broadcast VARIABLE, so the returned rewrite plan is a
@@ -448,24 +449,6 @@ class DedupSpec extends AnyFunSuite {
     assert(spark.sharedState.cacheManager.isEmpty,
       "the shingle projection must not stay cached after the call")
     assert(pairs.count() == dups.size.toLong)
-  }
-
-  test("decontaminateBloom: identical to both exact tiers even at fpp=0.5 (prefilter never decides)") {
-    import spark.implicits._
-    val corpus = base.toDF("id", "text")
-    // benchmark = a 10-word window of doc 3 -> exactly doc 3 shares an 8-gram
-    val bench = Seq(base(3)._2.split(" ").slice(2, 12).mkString(" ")).toDF("btext")
-    def ids(df: org.apache.spark.sql.DataFrame) =
-      df.select("id").collect().map(_.getLong(0)).toSet
-    val exact = ids(Dedup.decontaminate(corpus, "text", "id", bench, "btext", w = 8))
-    val join = ids(Dedup.decontaminateJoin(corpus, "text", "id", bench, "btext", w = 8))
-    // fpp=0.5 floods the prefilter with false positives; the exact confirm
-    // join must still produce the identical survivor set
-    val bloom = ids(Dedup.decontaminateBloom(corpus, "text", "id", bench, "btext",
-      w = 8, fpp = 0.5))
-    assert(exact == join)
-    assert(bloom == exact, "bloom tier must agree bit-for-bit with the exact tiers")
-    assert(!bloom.contains(3L) && bloom.size == base.size - 1)
   }
 
   test("dedupLinesKeepFirst: global first occurrence survives, later and within-doc repeats removed") {
